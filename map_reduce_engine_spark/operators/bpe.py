@@ -140,22 +140,13 @@ aggregate(
 
 def _train_rounds(words: DataFrame, n_merges: int) -> tuple[list[DataFrame], DataFrame]:
     syms = word_symbol_arrays(words).localCheckpoint(eager=True)
-    # Same fixed-round loop discipline as the graph operators: the loop
-    # state is the VOCABULARY-sized word table, so partitions are sized
-    # to it (capped at the session setting) and AQE is off for the loop
-    # scope — per-round wall time on static tiny-state shapes is stage
-    # scheduling, and every surplus partition costs n_merges rounds of
-    # pair-aggregate task-launch latency.
-    spark = words.sparkSession
-    session_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    # Size loop partitions to the EXPLODED pair volume the per-round
-    # aggregate actually shuffles (Σ symbols per word), not the word-type
-    # row count: the array-form state is one row per word TYPE, ~8x fewer
-    # rows than the symbol stream the 200k divisor was tuned for
-    # (ADVICE r11). One cheap aggregate over the checkpointed seed.
+    # The loop state is the VOCABULARY-sized word table. Size the loop to
+    # the EXPLODED pair volume the per-round aggregate actually shuffles
+    # (Σ symbols per word), not the word-type row count: the array-form
+    # state is one row per word TYPE, ~8x fewer rows than the symbol
+    # stream. One cheap aggregate over the checkpointed seed.
     n_syms = syms.agg(F.sum(F.size("syms"))).first()[0] or 0
-    nparts = max(1, min(session_parts, n_syms // 200_000 + 1))
-    with loop_conf(spark, nparts):
+    with loop_conf(words.sparkSession, n_syms):
         merge_rows, syms = _train_rounds_inner(syms, n_merges)
     return merge_rows, syms
 

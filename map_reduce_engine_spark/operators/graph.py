@@ -13,55 +13,62 @@ repeated until fixpoint. Each iteration is one join + one aggregate
 (two shuffles); iteration count is bounded by the component diameter —
 for dedup graphs (near-cliques) typically 2-3 passes. The driver-side
 loop holds only a changed-row COUNT per iteration (no data collects),
-and intermediate labels are cached/unpersisted per round — the standard
-Spark shape for iterative algorithms at scale.
+and each round's labels are eagerly ``localCheckpoint``-ed.
+
+Every loop here runs inside :func:`map_reduce_engine_spark.conf.loop_conf`,
+whose docstring holds the loop discipline they share (partition sizing,
+AQE off, invariants materialized once, checkpoint cadence).
 """
 
 from __future__ import annotations
+
+import itertools
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from map_reduce_engine_spark.conf import loop_conf
 
+# Fixed-round loops checkpoint their state every this many rounds, plus
+# the final round (see loop_conf).
+_CHECKPOINT_EVERY = 2
+
+
+def _undirected(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """(a, b) — both directions of every edge, duplicates and self-loops kept.
+
+    Symmetrized in-row, one explode per edge, rather than as a union of the
+    two directions: Spark shares no subplans across union branches, so a
+    union would run the edge list's upstream lineage (for near-dup
+    clustering, the whole MinHash-verify pipeline) once per branch.
+    """
+    return edges.select(
+        F.explode(
+            F.array(
+                F.struct(F.col(src).alias("a"), F.col(dst).alias("b")),
+                F.struct(F.col(dst).alias("a"), F.col(src).alias("b")),
+            )
+        ).alias("e")
+    ).select("e.a", "e.b")
+
 
 def connected_components(
     edges: DataFrame,
     src: str = "id1",
     dst: str = "id2",
-    max_iter: int = 20,
-    num_partitions: int | None = None,
+    max_iter: int | None = None,
 ) -> DataFrame:
     """(node, component) — component = smallest node id reachable.
 
     ``edges`` is an undirected pair list; isolated nodes absent from it are
     (by definition) their own singleton components and simply don't appear.
-
-    Loop discipline (shared with ``pagerank``): the edge list materializes
-    once, hash-partitioned on the join key so rounds re-shuffle only the
-    label updates; partition count is sized to the graph (capped at the
-    session setting); AQE is off for the loop scope — round shapes are
-    static and co-partitioned, so runtime re-planning only adds per-stage
-    latency — and each round's labels are eagerly local-checkpointed to
-    keep the plan constant-size.
+    Runs to the fixpoint. A ``max_iter`` cap stops after that many rounds
+    even short of it (labels travel one hop per round), which is what a
+    fixed-round unrolled oracle replays.
     """
-    # undirected: materialize both directions ONCE. Without this the
-    # per-round join would recompute the edge list's ENTIRE upstream lineage
-    # every iteration — for near-dup clustering that is the whole
-    # MinHash-verify pipeline, turning an O(rounds) loop into
-    # O(rounds * pipeline).
-    fwd = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    und0 = fwd.union(
-        edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
-    ).localCheckpoint(eager=True)
-
-    spark = edges.sparkSession
-    conf = spark.conf
-    session_parts = int(conf.get("spark.sql.shuffle.partitions"))
-    if num_partitions is None:
-        num_partitions = max(1, min(session_parts, und0.count() // 200_000 + 1))
-    with loop_conf(spark, num_partitions):
-        und = und0.repartition(num_partitions, "a").localCheckpoint(eager=True)
+    und0 = _undirected(edges, src, dst).localCheckpoint(eager=True)
+    with loop_conf(edges.sparkSession, und0.count()) as nparts:
+        und = und0.repartition(nparts, "a").localCheckpoint(eager=True)
 
         labels = (
             und.select(F.col("a").alias("node"))
@@ -70,7 +77,7 @@ def connected_components(
             .localCheckpoint(eager=True)
         )
 
-        for _ in range(max_iter):
+        for _ in itertools.count() if max_iter is None else range(max_iter):
             # each node proposes its current label to every neighbor
             proposals = (
                 und.join(labels, und.a == labels.node)
@@ -81,11 +88,8 @@ def connected_components(
                 .union(proposals)
                 .groupBy("node")
                 .agg(F.min("component").alias("component"))
+                .localCheckpoint(eager=True)
             )
-            # eager localCheckpoint: materializes AND truncates lineage, so
-            # the per-round plan stays constant-size (nested iterative plans
-            # grow exponentially in the optimizer otherwise)
-            new_labels = new_labels.localCheckpoint(eager=True)
             changed = (
                 new_labels.alias("n")
                 .join(labels.alias("o"), "node")
@@ -98,14 +102,8 @@ def connected_components(
     return labels
 
 
-def dedup_components(
-    df: DataFrame,
-    pairs: DataFrame,
-    id_col: str,
-    src: str = "id1",
-    dst: str = "id2",
-) -> DataFrame:
-    """Cluster near-dup pairs into components: (component, size, members...).
+def dedup_components(pairs: DataFrame, src: str = "id1", dst: str = "id2") -> DataFrame:
+    """Cluster near-dup pairs into components: (component, size).
 
     Output: one row per non-singleton component with its canonical id
     (the minimum member id) and size — the unit on which survivor
@@ -121,8 +119,6 @@ def pagerank(
     dst: str = "dst",
     iterations: int = 10,
     damping: float = 0.85,
-    num_partitions: int | None = None,
-    checkpoint_interval: int = 2,
 ) -> DataFrame:
     """(node, rank) — GraphX-convention PageRank on a directed edge list.
 
@@ -131,108 +127,11 @@ def pagerank(
     are per-node scores ≥ (1-d), not a probability distribution; nodes with
     no in-links converge to exactly 1-d).
 
-    Scale shape: out-degrees are computed once; each round is one equi-join
-    of ranks to edges on the source + one hash aggregate on the
-    destination — two shuffles per round, both on node keys. At 100 TB the
-    edge list is pre-partitioned on ``src`` once (or bucketed at write
-    time) so the per-round join reuses the partitioning and only the
-    aggregate shuffles. Each round's ranks (|V| rows) are eagerly
-    local-checkpointed: without lineage truncation the nested per-round
-    plan grows exponentially in the optimizer and OOMs the driver long
-    before the data does — the canonical iterative-algorithm trap (on a
-    cluster with a checkpoint dir, ``checkpoint()`` adds executor-failure
-    tolerance on top). The driver holds nothing but the loop counter.
+    This is :func:`personalized_pagerank` with every node seeded at 1.0;
+    ``(1 - d) * 1.0 == 1 - d`` exactly in IEEE-754, so the ranks are the
+    ones the unseeded recurrence computes, bit for bit.
     """
-    # materialize the edge list and degree table once — the per-round join
-    # would otherwise recompute their entire upstream lineage (e.g. the
-    # fact-table join that produced the edges) every iteration
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).localCheckpoint(
-        eager=True
-    )
-
-    spark = edges.sparkSession
-    conf = spark.conf
-    session_parts = int(conf.get("spark.sql.shuffle.partitions"))
-    if num_partitions is None:
-        # Per-round wall time on a fixed-round loop is dominated by STAGE
-        # SCHEDULING, not data: every surplus partition costs 10 rounds x
-        # 2 shuffles of task-launch latency. Size partitions to the graph
-        # (>= ~200k edges each, the same work-per-task target AQE's
-        # coalescing aims for), capped at the session setting so a 100 TB
-        # edge list still fans out to full cluster width.
-        num_partitions = max(1, min(session_parts, e.count() // 200_000 + 1))
-    # Loop-scoped AQE off: the round shapes are static and explicitly
-    # co-partitioned, so runtime re-planning has nothing to improve —
-    # it only adds a re-plan + extra job per stage per round (measured
-    # ~2.5x wall time at sf0.1). loop_conf restores on exit and is
-    # overlap-safe; cluster-wide queries outside the loop keep AQE.
-    with loop_conf(spark, num_partitions):
-        out_deg = e.groupBy("src").agg(F.count("*").alias("out_deg"))
-        # the edges⋈degrees join is loop-invariant: attach out_deg to each
-        # edge ONCE, so every round is a single equi-join
-        # (ranks⋈weighted-edges) + one aggregate instead of two joins + one
-        # aggregate. Division stays rank / out_deg (not a precomputed
-        # reciprocal) so the arithmetic is bit-identical to the
-        # unrolled-CTE oracle. Both loop inputs are hash-partitioned on
-        # their join keys BEFORE the checkpoint — localCheckpoint preserves
-        # outputPartitioning, so the per-round join re-shuffles neither the
-        # edge list nor the node table, only the rank updates.
-        we = (
-            e.join(out_deg, "src")
-            .select("src", "dst", "out_deg")
-            .repartition(num_partitions, "src")
-            .localCheckpoint(eager=True)
-        )
-        nodes = (
-            e.select(F.col("src").alias("node"))
-            .union(e.select(F.col("dst").alias("node")))
-            .distinct()
-            .repartition(num_partitions, "node")
-            .localCheckpoint(eager=True)
-        )
-
-        # no separate checkpoint for the initial ranks: they derive narrowly
-        # (one literal column) from the already-checkpointed node table, so
-        # an eager materialization here would only spend one more job on a
-        # copy of `nodes` — round 1 reads them straight off the checkpoint
-        ranks = nodes.withColumn("rank", F.lit(1.0))
-
-        for i in range(iterations):
-            contribs = (
-                we.join(ranks, we.src == ranks.node)
-                .select(
-                    F.col("dst").alias("node"),
-                    (F.col("rank") / F.col("out_deg")).alias("contrib"),
-                )
-            )
-            new_ranks = (
-                nodes.join(
-                    contribs.groupBy("node").agg(F.sum("contrib").alias("in_sum")),
-                    "node",
-                    "left",
-                )
-                .select(
-                    "node",
-                    (
-                        F.lit(1.0 - damping)
-                        + F.lit(damping) * F.coalesce("in_sum", F.lit(0.0))
-                    ).alias("rank"),
-                )
-            )
-            # Checkpoint every `checkpoint_interval` rounds, not every round:
-            # each eager localCheckpoint is one Spark job, and on small/
-            # vocabulary-sized graphs the job count IS the wall time (the
-            # "~3 s scheduling floor"). Interval 2 halves the job count while
-            # keeping the un-truncated plan at most 2 rounds deep — far from
-            # the ~20-round nesting that chokes the optimizer; measured 2x
-            # faster on the textrank word graph with bit-identical ranks
-            # (lineage truncation never changes the arithmetic). The final
-            # round always checkpoints so callers get a materialized result.
-            if (i + 1) % checkpoint_interval == 0 or i == iterations - 1:
-                ranks = new_ranks.localCheckpoint(eager=True)
-            else:
-                ranks = new_ranks
-    return ranks
+    return personalized_pagerank(edges, None, src, dst, iterations, damping)
 
 
 def hits(
@@ -240,7 +139,6 @@ def hits(
     src: str = "src",
     dst: str = "dst",
     iterations: int = 5,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """(node, hub, auth) — HITS (Kleinberg) on a directed edge list.
 
@@ -248,13 +146,10 @@ def hits(
     2-norm-normalize; hub(u) = Σ_{u→v} auth(v), normalize; repeat.
     Nodes with no in-links keep auth 0, no out-links keep hub 0.
 
-    Scale shape mirrors ``pagerank``: the edge list is materialized once
-    and pre-partitioned on EACH join key (the auth step joins hubs on
-    ``src``, the hub step joins auths on ``dst`` — two partitioned copies
-    so neither per-round join re-shuffles the edges), per-round scores are
-    localCheckpoint-ed, AQE/partition count are loop-scoped via
-    ``loop_conf``, and the only driver state is the loop counter. The
-    2-norm is a 1-row aggregate broadcast back — never a driver collect.
+    The edge list is pre-partitioned on EACH join key (the auth step joins
+    hubs on ``src``, the hub step joins auths on ``dst`` — two partitioned
+    copies so neither per-round join re-shuffles the edges). The 2-norm is
+    a 1-row aggregate broadcast back — never a driver collect.
     """
     if iterations < 1:
         raise ValueError(
@@ -264,18 +159,14 @@ def hits(
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).localCheckpoint(
         eager=True
     )
-    spark = edges.sparkSession
-    session_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    if num_partitions is None:
-        num_partitions = max(1, min(session_parts, e.count() // 200_000 + 1))
-    with loop_conf(spark, num_partitions):
-        e_src = e.repartition(num_partitions, "src").localCheckpoint(eager=True)
-        e_dst = e.repartition(num_partitions, "dst").localCheckpoint(eager=True)
+    with loop_conf(edges.sparkSession, e.count()) as nparts:
+        e_src = e.repartition(nparts, "src").localCheckpoint(eager=True)
+        e_dst = e.repartition(nparts, "dst").localCheckpoint(eager=True)
         nodes = (
             e.select(F.col("src").alias("node"))
             .union(e.select(F.col("dst").alias("node")))
             .distinct()
-            .repartition(num_partitions, "node")
+            .repartition(nparts, "node")
             .localCheckpoint(eager=True)
         )
         hub = nodes.withColumn("v", F.lit(1.0))
@@ -327,7 +218,6 @@ def sssp(
     dst: str = "dst",
     weight: str = "w",
     iterations: int = 4,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """(node, dist) — bounded-round single-source(-set) shortest paths by
     min-plus relaxation (distributed Bellman-Ford).
@@ -338,23 +228,18 @@ def sssp(
     are whatever integer type ``weight`` has: with integer weights every
     round is EXACT, no float drift ever.
 
-    Scale shape: the pagerank loop envelope — weighted edges checkpointed
-    once and pre-partitioned on ``src``, per-round distances
-    checkpointed, AQE/partitions loop-scoped. Each round is one equi-join
-    (reached distances ⋈ edges) + one min-aggregate on ``dst`` + one left
-    join back to the node table. ``iterations`` bounds the hop radius
-    (Bellman-Ford needs |V|-1 rounds for full convergence; a fixed small
-    radius is the usual production choice — distances beyond it read NULL).
+    Weighted edges are pre-partitioned on ``src``. Each round is one
+    equi-join (reached distances ⋈ edges) + one min-aggregate on ``dst`` +
+    one left join back to the node table. ``iterations`` bounds the hop
+    radius (Bellman-Ford needs |V|-1 rounds for full convergence; a fixed
+    small radius is the usual production choice — distances beyond it read
+    NULL).
     """
     e = edges.select(
         F.col(src).alias("src"), F.col(dst).alias("dst"), F.col(weight).alias("w")
     ).localCheckpoint(eager=True)
-    spark = edges.sparkSession
-    session_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    if num_partitions is None:
-        num_partitions = max(1, min(session_parts, e.count() // 200_000 + 1))
-    with loop_conf(spark, num_partitions):
-        we = e.repartition(num_partitions, "src").localCheckpoint(eager=True)
+    with loop_conf(edges.sparkSession, e.count()) as nparts:
+        we = e.repartition(nparts, "src").localCheckpoint(eager=True)
         # seeds union in: an isolated seed (no incident edges) must still
         # carry its distance-0 row — "seeds carry distance 0" holds even
         # when the node never appears in the edge list
@@ -363,7 +248,7 @@ def sssp(
             .union(e.select(F.col("dst").alias("node")))
             .union(seeds.select(F.col("node")))
             .distinct()
-            .repartition(num_partitions, "node")
+            .repartition(nparts, "node")
             .localCheckpoint(eager=True)
         )
         dist = nodes.join(
@@ -385,7 +270,7 @@ def sssp(
                 dist.join(cand, "node", "left")
                 .select("node", F.least("dist", "cand").alias("dist"))
             )
-            if (i + 1) % 2 == 0 or i == iterations - 1:
+            if (i + 1) % _CHECKPOINT_EVERY == 0 or i == iterations - 1:
                 dist = dist.localCheckpoint(eager=True)
     return dist
 
@@ -462,28 +347,15 @@ def bfs_distances(
 
     The third iterative-graph primitive next to connected components and
     PageRank: frontier expansion, one equi-join + anti-join per round.
-    Each round joins the current frontier to the (materialized-once)
-    undirected edge list, drops already-visited nodes with an anti-join on
-    the distance table, and eagerly ``localCheckpoint``s both — the same
-    lineage-truncation discipline as the other loops (the driver holds
-    only the round counter). Rounds are FIXED at ``max_depth`` so the
-    DuckDB oracle unrolls the identical expansion; an empty frontier makes
-    the remaining rounds no-ops rather than early-exiting (no per-round
-    driver count job).
+    Each round joins the current frontier to the undirected edge list,
+    drops already-visited nodes with an anti-join on the distance table,
+    and eagerly ``localCheckpoint``s both. Rounds are FIXED at
+    ``max_depth`` so the DuckDB oracle unrolls the identical expansion; an
+    empty frontier makes the remaining rounds no-ops rather than
+    early-exiting (no per-round driver count job).
     """
-    spark = edges.sparkSession
-    und0 = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    # same fixed-round loop discipline as pagerank/connected_components:
-    # graph-sized partitions, AQE off for the static loop shapes, edge
-    # list pre-partitioned on the join key once
-    session_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    nparts = max(1, min(session_parts, und0.count() // 200_000 + 1))
-    with loop_conf(spark, nparts):
+    und0 = _undirected(edges, src, dst).distinct().localCheckpoint(eager=True)
+    with loop_conf(edges.sparkSession, und0.count()) as nparts:
         und = und0.repartition(nparts, "a").localCheckpoint(eager=True)
         dist = seeds.select(
             F.col(seeds.columns[0]).alias("node"), F.lit(0).cast("bigint").alias("dist")
@@ -509,7 +381,6 @@ def label_propagation(
     src: str = "id1",
     dst: str = "id2",
     rounds: int = 4,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Synchronous label-propagation community detection (Raghavan et al.):
     (node, community) after a FIXED number of rounds.
@@ -522,25 +393,13 @@ def label_propagation(
     Synchronous LPA can oscillate on bipartite structure, which is why the
     contract is fixed-round, not run-to-convergence.
 
-    Loop discipline shared with ``pagerank``/``connected_components``:
-    edges materialize once (both directions), hash-partitioned on the join
-    key; AQE off and graph-sized shuffle partitions scoped to the loop;
-    per-round labels eagerly local-checkpointed.  Per round: one join +
-    one (node, label) hash aggregate + one per-node top-1 window over the
-    aggregate — all keyed shuffles bounded by the label-histogram size.
+    Per round: one join + one (node, label) hash aggregate + one per-node
+    top-1 window over the aggregate — all keyed shuffles bounded by the
+    label-histogram size.
     """
-    und0 = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .localCheckpoint(eager=True)
-    )
-    spark = edges.sparkSession
-    conf = spark.conf
-    session_parts = int(conf.get("spark.sql.shuffle.partitions"))
-    if num_partitions is None:
-        num_partitions = max(1, min(session_parts, und0.count() // 200_000 + 1))
-    with loop_conf(spark, num_partitions):
-        und = und0.repartition(num_partitions, "a").localCheckpoint(eager=True)
+    und0 = _undirected(edges, src, dst).localCheckpoint(eager=True)
+    with loop_conf(edges.sparkSession, und0.count()) as nparts:
+        und = und0.repartition(nparts, "a").localCheckpoint(eager=True)
         labels = (
             und.select(F.col("a").alias("node"))
             .distinct()
@@ -570,7 +429,6 @@ def k_core(
     dst: str = "v",
     k: int = 3,
     max_iter: int = 8,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """(node, core_degree) — the k-core of an undirected edge list.
 
@@ -580,24 +438,14 @@ def k_core(
     unrolling of the same peel computes the identical result). Output is
     one row per surviving node with its degree inside the core.
 
-    Loop discipline matches ``connected_components``: the doubled edge
-    list materializes once, AQE is scoped off (static round shapes), each
-    round's survivor edge set is eagerly local-checkpointed so the plan
-    stays constant-size, and every step is an equi-join/hash-agg — the
-    peel scales as O(rounds) co-partitioned shuffles at any graph size.
+    Each round's survivor edge set is eagerly local-checkpointed, and every
+    step is an equi-join/hash-agg — the peel scales as O(rounds)
+    co-partitioned shuffles at any graph size.
     """
-    und0 = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .localCheckpoint(eager=True)
-    )
-    spark = edges.sparkSession
-    session_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    if num_partitions is None:
-        num_partitions = max(1, min(session_parts, und0.count() // 200_000 + 1))
-    with loop_conf(spark, num_partitions):
-        und = und0.repartition(num_partitions, "a").localCheckpoint(eager=True)
-        n_edges = und.count()
+    und0 = _undirected(edges, src, dst).localCheckpoint(eager=True)
+    n_edges = und0.count()
+    with loop_conf(edges.sparkSession, n_edges) as nparts:
+        und = und0.repartition(nparts, "a").localCheckpoint(eager=True)
         for _ in range(max_iter):
             keep = (
                 und.groupBy("a")
@@ -622,13 +470,11 @@ def k_core(
 
 def personalized_pagerank(
     edges: DataFrame,
-    seeds: DataFrame,
+    seeds: DataFrame | None,
     src: str = "src",
     dst: str = "dst",
     iterations: int = 10,
     damping: float = 0.85,
-    num_partitions: int | None = None,
-    checkpoint_interval: int = 2,
 ) -> DataFrame:
     """(node, rank) — PageRank with teleport restricted to a seed set.
 
@@ -638,40 +484,46 @@ def personalized_pagerank(
     recommendation ("items close to THESE customers"), graph-based
     expansion of a labeled set, and local community scoring. Nodes
     unreachable from the seed set stay at exactly 0 and are meaningful
-    output (not dropped).
+    output (not dropped). Seeds are a DataFrame (first column), never a
+    driver-side list; ``seeds=None`` seeds every node, which is
+    :func:`pagerank`.
 
-    Scale/loop shape is identical to :func:`pagerank` (same
-    co-partitioned checkpointed loop inputs, loop-scoped AQE off,
-    interval checkpoints); the only change is the seed indicator riding
-    the node table. Seeds are a DataFrame (column ``node``), never a
-    driver-side list.
+    Scale shape: out-degrees are computed once; each round is one equi-join
+    of ranks to edges on the source + one hash aggregate on the
+    destination — two shuffles per round, both on node keys.
     """
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).localCheckpoint(
         eager=True
     )
-    spark = edges.sparkSession
-    conf = spark.conf
-    session_parts = int(conf.get("spark.sql.shuffle.partitions"))
-    if num_partitions is None:
-        num_partitions = max(1, min(session_parts, e.count() // 200_000 + 1))
-    with loop_conf(spark, num_partitions):
+    with loop_conf(edges.sparkSession, e.count()) as nparts:
         out_deg = e.groupBy("src").agg(F.count("*").alias("out_deg"))
+        # the edges⋈degrees join is loop-invariant: attach out_deg to each
+        # edge ONCE, so every round is a single equi-join
+        # (ranks⋈weighted-edges) + one aggregate instead of two joins + one
+        # aggregate. Division stays rank / out_deg (not a precomputed
+        # reciprocal) so the arithmetic is bit-identical to the
+        # unrolled-CTE oracle.
         we = (
             e.join(out_deg, "src")
             .select("src", "dst", "out_deg")
-            .repartition(num_partitions, "src")
+            .repartition(nparts, "src")
             .localCheckpoint(eager=True)
         )
-        seed_df = seeds.select(F.col(seeds.columns[0]).alias("node")).distinct()
         nodes = (
             e.select(F.col("src").alias("node"))
             .union(e.select(F.col("dst").alias("node")))
             .distinct()
-            .join(seed_df.withColumn("is_seed", F.lit(1.0)), "node", "left")
-            .select("node", F.coalesce("is_seed", F.lit(0.0)).alias("seed"))
-            .repartition(num_partitions, "node")
-            .localCheckpoint(eager=True)
         )
+        if seeds is None:
+            nodes = nodes.withColumn("seed", F.lit(1.0))
+        else:
+            seed_df = seeds.select(F.col(seeds.columns[0]).alias("node")).distinct()
+            nodes = nodes.join(
+                seed_df.withColumn("is_seed", F.lit(1.0)), "node", "left"
+            ).select("node", F.coalesce("is_seed", F.lit(0.0)).alias("seed"))
+        nodes = nodes.repartition(nparts, "node").localCheckpoint(eager=True)
+        # the initial ranks derive narrowly from the checkpointed node
+        # table, so round 1 reads them straight off it (no extra job)
         ranks = nodes.select("node", F.col("seed").alias("rank"))
         for i in range(iterations):
             contribs = we.join(ranks, we.src == ranks.node).select(
@@ -692,7 +544,7 @@ def personalized_pagerank(
                     ).alias("rank"),
                 )
             )
-            if (i + 1) % checkpoint_interval == 0 or i == iterations - 1:
+            if (i + 1) % _CHECKPOINT_EVERY == 0 or i == iterations - 1:
                 ranks = new_ranks.localCheckpoint(eager=True)
             else:
                 ranks = new_ranks
@@ -703,7 +555,6 @@ def k_truss(
     edges: DataFrame,
     k: int = 4,
     max_iter: int = 5,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """(u, v, n_triangles) — the k-truss of an undirected edge list: the
     maximal subgraph where every edge closes at least k-2 triangles
@@ -716,16 +567,11 @@ def k_truss(
     triangle appears exactly once), explodes them to their three edges,
     and drops edges below support k-2; peeling is monotone so a bounded
     unrolling equals the fixpoint (the k_core argument). Support of the
-    SURVIVING subgraph is recomputed for the output. Loop discipline as
-    k_core: checkpointed rounds, early break at fixpoint.
+    SURVIVING subgraph is recomputed for the output. Checkpointed rounds,
+    early break at fixpoint, as in k_core.
     """
     e = edges.select("u", "v").localCheckpoint(eager=True)
     prev_n = e.count()
-    spark = edges.sparkSession
-    conf = spark.conf
-    session_parts = int(conf.get("spark.sql.shuffle.partitions"))
-    if num_partitions is None:
-        num_partitions = max(1, min(session_parts, prev_n // 200_000 + 1))
 
     def support(ed: DataFrame) -> DataFrame:
         e1, e2, e3 = ed.alias("e1"), ed.alias("e2"), ed.alias("e3")
@@ -746,7 +592,7 @@ def k_truss(
         )
         return sides.groupBy("u", "v").agg(F.count("*").cast("bigint").alias("n_triangles"))
 
-    with loop_conf(spark, num_partitions):
+    with loop_conf(edges.sparkSession, prev_n):
         for _ in range(max_iter):
             s = support(e)
             e = (

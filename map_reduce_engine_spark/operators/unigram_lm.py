@@ -126,20 +126,16 @@ def trainable_words(words: DataFrame, word_col: str = "word", cnt_col: str = "wc
 @contextmanager
 def sized_loop(words: DataFrame) -> Iterator[DataFrame]:
     """Scope a word-level DP pass: apply the training length cap, freeze the
-    dictionary (``localCheckpoint`` — EM re-reads it every round), and size
-    ``spark.sql.shuffle.partitions`` to the priced edge table (|words| ×
-    O(len_cap · PIECE_MAX_LEN) rows ≈ 80·|words|) for the duration,
-    restoring on exit.
+    dictionary (``localCheckpoint`` — EM re-reads it every round), and open
+    a :func:`loop_conf` scope sized to the priced edge table (|words| ×
+    O(len_cap · PIECE_MAX_LEN) rows ≈ 80·|words|).
 
     The shared preamble of :func:`unigram_train`, :func:`unigram_segment`,
-    and the registry's n-best enumeration — one place for the sizing rule
-    instead of three inline copies. The ``count()`` is a dictionary-sized
-    driver action (the sanctioned bounded-sizing pattern)."""
+    and the registry's n-best enumeration. The ``count()`` is a
+    dictionary-sized driver action (the sanctioned bounded-sizing
+    pattern)."""
     w = trainable_words(words).localCheckpoint(eager=True)
-    spark = w.sparkSession
-    session_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    nparts = max(1, min(session_parts, w.count() * 80 // 200_000 + 1))
-    with loop_conf(spark, nparts):
+    with loop_conf(w.sparkSession, w.count() * 80):
         yield w
 
 

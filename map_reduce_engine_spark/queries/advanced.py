@@ -1688,7 +1688,7 @@ def _pagerank_oracle(iterations: int = 10) -> str:
     doc="static PageRank (10 rounds, GraphX convention) over the directed "
     "customer→supplier purchase graph (distinct order edges). The classic "
     "driver-orchestrated iterative algorithm: two node-keyed shuffles per "
-    "round, per-round cache with explicit unpersist, nothing driver-"
+    "round, ranks localCheckpoint-ed every 2 rounds, nothing driver-"
     "resident but the loop counter (operators/graph.py::pagerank — same "
     "loop shape as connected components and IVF's KMeans). FULLY "
     "oracle-checked against the loop unrolled into 10 chained SQL CTEs",

@@ -231,7 +231,7 @@ def minhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     "at scale",
 )
 def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from map_reduce_engine_spark.operators.graph import connected_components
+    from map_reduce_engine_spark.operators import graph
 
     docs = t(spark, sf_dir, "documents")
     # exact-duplicate pairs: min doc per text ↔ every other doc of that text
@@ -241,8 +241,7 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("doc_id") != F.col("id1"))
         .select("id1", F.col("doc_id").alias("id2"))
     )
-    cc = connected_components(pairs)
-    return cc.groupBy("component").agg(F.count("*").alias("size"))
+    return graph.dedup_components(pairs)
 
 
 @register(
@@ -279,15 +278,7 @@ def neardup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = t(spark, sf_dir, "documents").where(F.trim("text") != "")
     sigs = dd.minhash_signatures(docs, "doc_id", "text", num_hashes=64)
     cands = dd.minhash_candidate_pairs(sigs, bands=16, rows_per_band=4)
-    # freeze the verified pair set before clustering: the component loop's
-    # doubled-edge union references its input TWICE, so an unmaterialized
-    # verify pipeline would execute once per union branch (the
-    # golden_record_fields lesson)
-    verified = (
-        dd.jaccard_pairs(docs, "doc_id", "text", min_jaccard=0.7, candidates=cands)
-        .select("id1", "id2")
-        .localCheckpoint(eager=True)
-    )
+    verified = dd.jaccard_pairs(docs, "doc_id", "text", min_jaccard=0.7, candidates=cands)
     cc = connected_components(verified)
     return (
         cc.groupBy("component")
@@ -1431,12 +1422,7 @@ def golden_record_fields(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = t(spark, sf_dir, "documents").where(F.trim("text") != "")
     sigs = dd.minhash_signatures(docs, "doc_id", "text", num_hashes=64)
     cands = dd.minhash_candidate_pairs(sigs, bands=16, rows_per_band=4)
-    # the component loop's doubled-edge union would otherwise execute the
-    # whole MinHash-verify pipeline once per union branch: freeze the pair
-    # set first (it is the dup-pair list — tiny relative to the corpus)
-    pairs = dd.jaccard_pairs(
-        docs, "doc_id", "text", min_jaccard=0.7, candidates=cands
-    ).localCheckpoint(eager=True)
+    pairs = dd.jaccard_pairs(docs, "doc_id", "text", min_jaccard=0.7, candidates=cands)
     # max_iter pinned to the oracle's 8 unrolled label-prop rounds: the
     # early-broken fixpoint equals the fixed unrolling whenever the graph
     # converges within 8 hops, and both sides run the identical 8 rounds

@@ -56,10 +56,19 @@ def test_interleaved_exit_order_restores_pristine(spark):
 
 
 def test_loop_conf_profile(spark):
+    """Partitions follow the loop-state row volume (one at zero rows),
+    capped at the session value; AQE is off inside; both keys restore."""
     before_parts = spark.conf.get(KEY)
     before_aqe = spark.conf.get(AQE)
-    with loop_conf(spark, 2):
-        assert spark.conf.get(KEY) == "2"
+    with loop_conf(spark, 0) as nparts:
+        assert nparts == 1
+        assert spark.conf.get(KEY) == "1"
+        assert spark.conf.get(AQE) == "false"
+    assert spark.conf.get(KEY) == before_parts
+    assert spark.conf.get(AQE) == before_aqe
+    with loop_conf(spark, 10**12) as nparts:
+        assert nparts == int(before_parts)
+        assert spark.conf.get(KEY) == before_parts
         assert spark.conf.get(AQE) == "false"
     assert spark.conf.get(KEY) == before_parts
     assert spark.conf.get(AQE) == before_aqe
