@@ -186,9 +186,10 @@ def write_tsv(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     ``ReduceRunner.java:113-122`` writes one tab-separated line per pair into
     ``finaloutput``; one file per reducer. Here: one file per partition, order
     unspecified (the reference's order is Hashtable enumeration — also
-    unspecified). Compare as sorted multisets.
+    unspecified). Compare as sorted multisets. A NULL renders as the empty
+    field, so every line keeps one tab per column boundary.
     """
-    cols = [F.col(c).cast("string") for c in df.columns]
+    cols = [F.coalesce(F.col(c).cast("string"), F.lit("")) for c in df.columns]
     df.select(F.concat_ws("\t", *cols).alias("value")).write.mode(mode).text(path)
 
 

@@ -14,17 +14,30 @@ Here the same contract is a thin Arrow-batched layer:
   record (flatMap semantics; the key argument of the reference's ``map`` is
   always null at invocation, ``MapRunner.java:76``, so our map_fn takes just
   the record).
-- grouping is ``groupBy(key)`` (the reference's A7 hash partitioner + A9
-  file-per-key grouping — one Spark shuffle).
-- ``reduce_fn`` runs in ``applyInPandas`` (per-group — the reference's
-  ReduceRunner), seeing ALL values for its key. Spark's shuffle already
-  globalizes groups, so the reference's cross-chunk AddInterface merge (A11)
-  is unnecessary for correctness; it is still available as
-  ``final_merge=True`` for reducers that emit overlapping keys.
+- grouping is one shuffle on the key (the reference's A7 hash partitioner +
+  A9 file-per-key grouping): ``repartition(key)`` then
+  ``sortWithinPartitions(key)``, the reference's sort-by-key
+  (``MapRunner.java:83-84``).
+- ``reduce_fn`` runs in one ``mapInPandas`` pass over each sorted partition
+  (the reference's ReduceRunner scan, ``ReduceRunner.java:90-105``): it is
+  called once per contiguous key run with ALL values for its key, carried
+  across Arrow batch boundaries. Spark's shuffle already globalizes groups,
+  so the reference's cross-chunk AddInterface merge (A11) is unnecessary for
+  correctness; it is still available as ``final_merge=True`` for reducers
+  that emit overlapping keys.
 
 Deliberately NOT replicated (documented latent bugs, SURVEY.md §1.3):
 hyphenated-key corruption, tab-in-value corruption, unordered Hashtable
-output ordering. Key identity here is the typed column value.
+output ordering. Key identity here is the typed column value: null keys
+form one group, ``-0.0`` and ``0.0`` are one key labelled ``0.0``, and a
+null key in a numeric column reaches ``reduce_fn`` as NaN.
+
+Other known deviations:
+
+- a NaN key emitted by ``map_fn`` comes out as a NULL key: pyspark's
+  pandas→Arrow conversion masks NaN as null, so it joins the null group;
+- a null in an integral value column reaches ``reduce_fn`` as NaN beside
+  the key's other values, which stay ints.
 
 Scale note: this is the engine's slow path (Python per record). Built-in
 operators (wordcount & friends) use pure DataFrame expressions instead; use
@@ -39,6 +52,7 @@ from typing import Any
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType
 
 # The reference's five Writable wrapper types (SURVEY.md §1.2) → Spark SQL
 # types + their AddInterface.add merge semantics.
@@ -58,6 +72,22 @@ def _sql_type(t: str) -> str:
 
 def _add_semantics(t: str) -> str:
     return WRITABLES[t][1] if t in WRITABLES else ("concat" if t == "string" else "sum")
+
+
+def _pairs_frame(pairs: list[tuple]) -> pd.DataFrame:
+    """(key, value) pairs as an object-dtype frame; Arrow casts to the schema."""
+    keys = [p[0] for p in pairs]
+    vals = [p[1] for p in pairs]
+    return pd.DataFrame({"key": pd.Series(keys, dtype=object), "value": pd.Series(vals, dtype=object)})
+
+
+def _pylist(col: pd.Series, integral: bool) -> list:
+    """A batch column as Python values. pandas widens an integral column
+    holding a null to float64; its values go back to ints, nulls stay NaN."""
+    vals = col.tolist()
+    if integral and col.dtype.kind == "f":
+        return [v if v != v else int(v) for v in vals]
+    return vals
 
 
 def map_reduce(
@@ -88,33 +118,41 @@ def map_reduce(
 
     def run_map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            keys: list = []
-            vals: list = []
+            out: list[tuple] = []
             for rec in pdf.itertuples(index=False, name=None):
-                record = rec[0] if single_col else rec
-                for k, v in map_fn(record):
-                    keys.append(k)
-                    vals.append(v)
-            yield pd.DataFrame({"key": pd.Series(keys, dtype=object), "value": pd.Series(vals, dtype=object)})
+                out.extend(map_fn(rec[0] if single_col else rec))
+            yield _pairs_frame(out)
 
     mapped = df.mapInPandas(run_map, schema=f"key {kt}, value {vt}")
+    # Reference semantics: numReducers bounds reduce parallelism
+    # (Partitioner.java:34-40; clamp Communicator.java:137-147). In Spark
+    # this is just the shuffle partition count; without it AQE coalesces.
     if num_reducers is not None:
-        # Reference semantics: numReducers bounds reduce parallelism
-        # (Partitioner.java:34-40; clamp Communicator.java:137-147). In Spark
-        # this is just the shuffle partition count for this stage.
         mapped = mapped.repartition(num_reducers, "key")
+    else:
+        mapped = mapped.repartition("key")
+    # One pass per sorted partition: reduce_fn runs once per contiguous key
+    # run. -0.0 and 0.0 sort (and hash) as one key, labelled 0.0; a null key
+    # in a numeric column arrives as NaN, so NaN keys compare equal.
+    int_key, int_value = (isinstance(f.dataType, IntegralType) for f in mapped.schema.fields)
 
-    def run_reduce(pdf: pd.DataFrame) -> pd.DataFrame:
-        key = pdf["key"].iloc[0]
-        values = pdf["value"].tolist()
-        keys: list = []
-        vals: list = []
-        for k2, v2 in reduce_fn(key, values):
-            keys.append(k2)
-            vals.append(v2)
-        return pd.DataFrame({"key": pd.Series(keys, dtype=object), "value": pd.Series(vals, dtype=object)})
+    def run_reduce(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        key: Any = None
+        values: list | None = None  # the current key run; None before the first row
+        for pdf in batches:
+            out: list[tuple] = []
+            for k, v in zip(_pylist(pdf["key"], int_key), _pylist(pdf["value"], int_value)):
+                if values is None or not (k == key or (k != k and key != key)):
+                    if values is not None:
+                        out.extend(reduce_fn(key, values))
+                    key, values = (0.0 if k == 0 and isinstance(k, float) else k), []
+                values.append(v)
+            if out:
+                yield _pairs_frame(out)
+        if values is not None:
+            yield _pairs_frame(list(reduce_fn(key, values)))
 
-    reduced = mapped.groupBy("key").applyInPandas(run_reduce, schema=f"key {okt}, value {ovt}")
+    reduced = mapped.sortWithinPartitions("key").mapInPandas(run_reduce, schema=f"key {okt}, value {ovt}")
 
     if final_merge:
         # AddInterface final combine (ReduceRunner.java:154-172): merge rows

@@ -43,6 +43,17 @@ def test_tsv_sink_key_value_contract(spark, tmp_path):
     assert lines == ["a\t2", "b\t1"]
 
 
+def test_tsv_sink_null_renders_as_empty_field(spark, tmp_path):
+    """A NULL key or value is the empty field: the line still has its tab,
+    so it splits into exactly two fields."""
+    out = tmp_path / "out"
+    df = spark.createDataFrame([(None, 2), ("b", None), ("c", 3)], "key string, value bigint")
+    mio.write_tsv(df, str(out))
+    lines = sorted(r.value for r in spark.read.text(str(out)).collect())
+    assert lines == ["\t2", "b\t", "c\t3"]
+    assert all(len(line.split("\t")) == 2 for line in lines)
+
+
 def test_wordcount_end_to_end_text_to_tsv(spark, tmp_path):
     """The reference's flagship job end-to-end: text dir in → wordcount →
     TSV out (WordCount.java:13-35 / report pp.7-8 output layout)."""
