@@ -51,26 +51,6 @@ def read_json(spark: SparkSession, path: str, schema=None) -> DataFrame:
     return reader.json(path)
 
 
-def read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Read the ``events`` fixture table, normalizing ``ts`` to TIMESTAMP_NTZ.
-
-    Fixture generations have shipped ``ts`` as either TIMESTAMP(MICROS)
-    (current) or as int64 epoch-nanos (older runs, where Spark lacks a
-    TIMESTAMP(NANOS) parquet type and must read nanos as long via
-    ``spark.sql.legacy.parquet.nanosAsLong``). Sniff the physical type and
-    normalize so every downstream query sees one schema. TIMESTAMP_NTZ keeps
-    the value timezone-independent for oracle comparison.
-    """
-    # Long branch: integer division (not double — precision loss at ~1.7e18 ns
-    # epochs). Timestamp branch: NOT cast("timestamp_ntz"), which renders the
-    # instant in the SESSION timezone — unix_micros reads the raw epoch, so
-    # the reader is self-contained under any session timezone. Both live in
-    # _normalize_ts, shared by every fixture table with a timestamp column.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return _normalize_ts(df, "ts")
-
-
 def read_orc(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.orc(path)
 
@@ -135,9 +115,20 @@ _FIXTURE_TS_COLS: dict[str, tuple[str, ...]] = {
 
 def _normalize_ts(df: DataFrame, col: str) -> DataFrame:
     """Normalize one fixture timestamp column to TIMESTAMP_NTZ, whatever the
-    parquet physically holds (see read_events for the per-case rationale)."""
+    parquet physically holds.
+
+    Fixture generations have shipped timestamps as TIMESTAMP(MICROS)
+    (current), as int64 epoch-nanos (older runs, where Spark lacks a
+    TIMESTAMP(NANOS) parquet type and must read nanos as long via
+    ``spark.sql.legacy.parquet.nanosAsLong``), as a tz-instant, or as DATE.
+    Sniff the physical type and normalize so every downstream query sees one
+    schema. TIMESTAMP_NTZ keeps the value timezone-independent for oracle
+    comparison.
+    """
     t = df.schema[col].dataType.typeName()
-    if t in ("long", "bigint"):  # int64 epoch-nanos generations
+    # int64 epoch-nanos generations: integer division, not double (precision
+    # loss at ~1.7e18 ns epochs)
+    if t in ("long", "bigint"):
         return df.withColumn(
             col,
             F.expr(

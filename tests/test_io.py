@@ -339,7 +339,7 @@ def test_read_table_tolerates_timestamp_encoding_drift(spark, tmp_path):
     """Driver fixture regenerations have shipped the same column as
     TIMESTAMP(MICROS), int64 epoch-nanos, a tz-instant, and could ship DATE;
     read_table must normalize ALL of them to the SAME TIMESTAMP_NTZ values
-    (this exact drift broke the events reader once — io.read_events)."""
+    (this exact drift once broke the events reader)."""
     import datetime
 
     import pyarrow as pa

@@ -46,7 +46,7 @@ def test_session_window_stream(spark, sf_dir):
 
 
 def test_streaming_dedup_matches_batch_distinct(spark, sf_dir):
-    from map_reduce_engine_spark.io import read_events
+    from map_reduce_engine_spark.io import read_table
     from map_reduce_engine_spark.streaming import streaming_dedup
 
     stream = events_stream(spark, sf_dir)
@@ -55,21 +55,21 @@ def test_streaming_dedup_matches_batch_distinct(spark, sf_dir):
     )
     n = spark.sql("SELECT count(*) FROM t_dedup").collect()[0][0]
     # schema is preserved (full rows survive, one arbitrary survivor per key)
-    assert set(spark.table("t_dedup").columns) == set(read_events(spark, sf_dir).columns)
-    batch_distinct = read_events(spark, sf_dir).select("user_id", "event_type").distinct().count()
+    assert set(spark.table("t_dedup").columns) == set(read_table(spark, sf_dir, "events").columns)
+    batch_distinct = read_table(spark, sf_dir, "events").select("user_id", "event_type").distinct().count()
     assert n == batch_distinct
 
 
 def test_stream_static_join_matches_batch(spark, sf_dir):
     import pyspark.sql.functions as F
 
-    from map_reduce_engine_spark.io import read_events
+    from map_reduce_engine_spark.io import read_table
 
     got = {
         r.event_type: (r.n, r.total_dev)
         for r in REGISTRY["streaming_stream_static_join"].fn(spark, sf_dir).collect()
     }
-    ev = read_events(spark, sf_dir)
+    ev = read_table(spark, sf_dir, "events")
     dim = ev.groupBy("user_id").agg(F.round(F.avg("value"), 4).alias("user_avg"))
     want = {
         r.event_type: (r.n, r.total_dev)
@@ -104,7 +104,7 @@ def test_stateful_running_total(spark, sf_dir):
 def test_stream_stream_interval_join_matches_batch(spark, sf_dir):
     """The streaming interval join drained over the bounded source must
     equal the identical batch join (Spark's unified model)."""
-    from map_reduce_engine_spark.io import read_events
+    from map_reduce_engine_spark.io import read_table
     from map_reduce_engine_spark.streaming import (
         events_stream,
         run_to_memory,
@@ -121,7 +121,7 @@ def test_stream_stream_interval_join_matches_batch(spark, sf_dir):
     run_to_memory(joined, "t_ssj", output_mode="append")
     got = _table_rows(spark, "t_ssj")
 
-    b = read_events(spark, sf_dir).withColumn("ts", F.col("ts").cast("timestamp"))
+    b = read_table(spark, sf_dir, "events").withColumn("ts", F.col("ts").cast("timestamp"))
     bl, br = b.where(F.col("event_type") == "click").alias("l"), b.where(
         F.col("event_type") == "purchase"
     ).alias("r")
@@ -186,7 +186,7 @@ def _protobuf_available() -> bool:
 def test_transform_with_state_matches_batch(spark, sf_dir):
     """The Spark 4 typed-state processor's final per-user stats must equal
     the batch aggregate over the same bounded source (last update wins)."""
-    from map_reduce_engine_spark.io import read_events
+    from map_reduce_engine_spark.io import read_table
     from map_reduce_engine_spark.streaming import (
         events_stream,
         run_to_memory,
@@ -206,7 +206,7 @@ def test_transform_with_state_matches_batch(spark, sf_dir):
     }
     want = {
         (r.user_id, r.n, r.total, r.max_value)
-        for r in read_events(spark, sf_dir)
+        for r in read_table(spark, sf_dir, "events")
         .groupBy("user_id")
         .agg(
             F.count("*").alias("n"),
