@@ -10,6 +10,20 @@ Defaults are chosen for the 100 TB posture:
   survives a 1000x scale-up without retuning shuffle partitions by hand.
 - Arrow on for any Python-boundary exchange (the map/reduce compat surface).
 - Session timezone pinned to UTC so results are oracle-comparable.
+
+Python workers:
+- ``spark.python.daemon.module`` runs them under ``worker_daemon``, which
+  stops every Python task re-reading ``pyspark.zip`` before the user's code
+  runs (about 0.1 s per task on CPython < 3.13; see that module).
+- ``spark.executorEnv.PYTHONPATH`` puts this package's parent directory on
+  the workers' path, so they import the driver's copy of the package. The
+  daemon module needs it to load, and so does every ``map_reduce`` job,
+  whose pickled ``map_fn``/``reduce_fn`` closures reference the package:
+  without it a driver started outside the repo root (a script that does
+  ``sys.path.insert``) fails in the workers with ``ModuleNotFoundError``.
+- The master is ``local[cpus,2]``: a failed task is retried once, then the
+  job aborts, as the reference's data node does (``DataNode.java:320-369``).
+  Plain ``local[cpus]`` never retries a task.
 """
 
 from __future__ import annotations
@@ -17,6 +31,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# The directory holding this package: the workers' import root for it.
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -47,8 +64,10 @@ def get_spark(
         shuffle_partitions = max(cpus, 8)
 
     builder = (
-        SparkSession.builder.master(f"local[{cpus}]")
+        SparkSession.builder.master(f"local[{cpus},2]")
         .appName(app_name)
+        .config("spark.python.daemon.module", "map_reduce_engine_spark.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

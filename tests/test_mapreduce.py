@@ -139,6 +139,38 @@ def test_num_reducers_repartition(spark, prose_df):
     assert {(r.key, r.value) for r in out.collect()} == {(r.key, r.value) for r in out2.collect()}
 
 
+def test_map_reduce_retries_a_failed_task_once(spark, prose_df):
+    """The reference retries a failed task once (DataNode.java:320-369):
+    a map task whose first attempt raises succeeds on its retry."""
+
+    def flaky_mapper(line):
+        from pyspark import TaskContext
+
+        if TaskContext.get().attemptNumber() == 0:
+            raise RuntimeError("injected first-attempt failure")
+        yield from mapreduce.wordcount_mapper(line)
+
+    out = mapreduce.map_reduce(
+        prose_df.select("value").repartition(2), flaky_mapper, mapreduce.wordcount_reducer
+    )
+    assert {r.key: r.value for r in out.collect()} == dict(golden_wordcount())
+
+
+def test_map_reduce_aborts_after_the_retry_and_names_the_error(spark, prose_df):
+    """A map task failing on every attempt aborts the job after its one
+    retry (attempt 1); the error names the mapper's own exception."""
+
+    def broken_mapper(line):
+        from pyspark import TaskContext
+
+        raise ValueError(f"broken mapper on attempt {TaskContext.get().attemptNumber()}")
+        yield  # a generator, like every map_fn
+
+    out = mapreduce.map_reduce(prose_df.select("value"), broken_mapper, mapreduce.wordcount_reducer)
+    with pytest.raises(Exception, match="ValueError: broken mapper on attempt 1"):
+        out.collect()
+
+
 def test_writable_type_mapping():
     assert mapreduce.WRITABLES["int"] == ("int", "sum")
     assert mapreduce.WRITABLES["text"] == ("string", "concat")
