@@ -14,7 +14,7 @@ from __future__ import annotations
 from collections.abc import Callable
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 
 from map_reduce_engine_spark.io import read_table
 
@@ -45,3 +45,19 @@ def register(name: str, oracle: str | None = None, doc: str = ""):
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Fixture table loader (handles the events nanos-timestamp special case)."""
     return read_table(spark, sf_dir, name)
+
+
+def collect_bounded(df: DataFrame, max_rows: int, query: str) -> list[Row]:
+    """Collect the bounded grid a query iterates on the driver.
+
+    The plan gate only sees the scan of the rows the driver hands back, so
+    the grid's row bound is enforced here: more than ``max_rows`` rows
+    raises ``ValueError`` naming the query instead of pulling a data-sized
+    frame into driver memory.
+    """
+    rows = df.limit(max_rows + 1).collect()
+    if len(rows) > max_rows:
+        raise ValueError(
+            f"{query}: driver-side grid exceeds its bound of {max_rows} rows"
+        )
+    return rows

@@ -21,6 +21,11 @@ parts-per-million via BIGINT arithmetic and integer division — both
 engines compute identical integers regardless of float summation order.
 Rate-limited scalar broadcasts (1-row crossJoins) are the only non-equi
 joins; each is registered in ``tests/test_plans.py::_SANCTIONED_NESTED_LOOP``.
+Fixed-round loops whose state is a domain-bounded grid (Markov chains,
+Sinkhorn, Bradley-Terry, IPF, Huber) build the grid in one aggregate,
+collect it once through ``base.collect_bounded`` and run their rounds in
+plain Python, replaying the oracle's frozen-integer arithmetic in the
+same operation order.
 
 Scale shape: every query here is one or two hash aggregates over the fact
 table followed by arithmetic on a bounded grid (score levels, class
@@ -38,11 +43,14 @@ unchanged either way.
 
 from __future__ import annotations
 
+import math
+from collections import Counter
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from map_reduce_engine_spark.operators import text as text_ops
-from map_reduce_engine_spark.queries.base import register, t
+from map_reduce_engine_spark.queries.base import collect_bounded, register, t
 
 # DuckDB twin of operators/text.py::langid — same marker-word argmax with
 # the same fixed-order tiebreak (shared with langid_confusion_matrix).
@@ -945,6 +953,10 @@ def kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _MARKOV_STATES = ["click", "error", "purchase", "signup", "view"]
 _MARKOV_ROUNDS = 12
+# Transition cells the two Markov queries collect. event_type is a short
+# enumerated column (5 types in the fixtures); 34^2 admits 32 types plus
+# the attribution chain's start/conv/null states.
+_MARKOV_MAX_CELLS = 34 * 34
 
 
 def _markov_oracle() -> str:
@@ -1016,30 +1028,31 @@ def _markov_oracle() -> str:
     "materialized CTE chain.",
 )
 def markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import math
-
     ev = t(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     pairs = ev.select(
         F.lag("event_type").over(w).alias("prev"), F.col("event_type").alias("cur")
     ).where(F.col("prev").isNotNull())
+    grid = pairs.groupBy("prev", "cur").agg(F.count("*").alias("n"))
     cells = {
-        (r.prev, r.cur): int(r.n)
-        for r in pairs.groupBy("prev", "cur").agg(F.count("*").alias("n")).collect()
+        (r.prev, r.cur): r.n
+        for r in collect_bounded(grid, _MARKOV_MAX_CELLS, "markov_stationary")
     }
     states = _MARKOV_STATES
     c = [[cells.get((a, b), 0) for b in states] for a in states]
     rt = [sum(row) for row in c]
     ppb = [200000000] * len(states)
-    for _ in range(_MARKOV_ROUNDS):
-        nxt = []
-        for j in range(len(states)):
-            tot = 0.0
-            for i in range(len(states)):
-                tot += (ppb[i] / 1e9) * c[i][j] / rt[i]
-            nxt.append(math.floor(tot * 1e9 + 0.5))
-        ppb = nxt
-    stat = F.lit(None).cast("bigint")
+    if 0 in rt:  # the oracle's x / 0 is NULL, and every state sums every row
+        ppb = [None] * len(states)
+    else:
+        for _ in range(_MARKOV_ROUNDS):
+            nxt = []
+            for j in range(len(states)):
+                tot = 0.0
+                for i in range(len(states)):
+                    tot += (ppb[i] / 1e9) * c[i][j] / rt[i]
+                nxt.append(math.floor(tot * 1e9 + 0.5))
+            ppb = nxt
     expr = None
     for j, s in enumerate(states):
         cond = (F.col("event_type") == s, F.lit(ppb[j]).cast("bigint"))
@@ -1823,8 +1836,6 @@ def _attr_oracle() -> str:
     "all five runs unrolled as materialized CTE chains.",
 )
 def markov_attribution_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import math
-
     ev = t(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     j = ev.select(
@@ -1857,9 +1868,10 @@ def markov_attribution_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("event_type").alias("s"), F.lit("null").alias("s2"))
     )
     trans = first.unionByName(mid).unionByName(last)
+    grid = trans.groupBy("s", "s2").agg(F.count("*").alias("n"))
     counts = {
-        (r.s, r.s2): int(r.n)
-        for r in trans.groupBy("s", "s2").agg(F.count("*").alias("n")).collect()
+        (r.s, r.s2): r.n
+        for r in collect_bounded(grid, _MARKOV_MAX_CELLS, "markov_attribution_removal")
     }
     states = ["start"] + _ATTR_CH
     cm = {
@@ -1868,8 +1880,10 @@ def markov_attribution_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     }
     rt = {a: sum(cm[a].values()) for a in states}
 
-    def run(removed: str | None) -> int:
+    def run(removed: str | None) -> int | None:
         active = [s for s in _ATTR_CH if s != removed]
+        if 0 in (rt[s] for s in active + ["start"]):
+            return None  # the oracle's x / 0 is NULL; by round 2 every state has it
         v = {s: 0 for s in active}
         for _ in range(_ATTR_ROUNDS):
             nv = {}
@@ -1888,33 +1902,19 @@ def markov_attribution_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     base = run(None)
     rm = {c: run(c) for c in _ATTR_CH}
-    re_ppm = {c: max(0, 1000000 - (1000000 * rm[c]) // base) for c in _ATTR_CH}
+    # DuckDB's NULL or x // 0 inside greatest(0, ...) leaves 0
+    re_ppm = {
+        c: 0
+        if not base or rm[c] is None
+        else max(0, 1000000 - (1000000 * rm[c]) // base)
+        for c in _ATTR_CH
+    }
     tot_re = sum(re_ppm.values())
-
-    chans = (
-        ev.where(F.col("event_type") != "purchase")
-        .select(F.col("event_type").alias("channel"))
-        .distinct()
-    )
-
-    def lit_map(d: dict[str, int]):
-        expr = None
-        for c in _ATTR_CH:
-            cond = (F.col("channel") == c, F.lit(int(d[c])).cast("bigint"))
-            expr = F.when(*cond) if expr is None else expr.when(*cond)
-        return expr.otherwise(F.lit(None).cast("bigint"))
-
-    return chans.select(
-        "channel",
-        F.lit(base).cast("bigint").alias("base_conv_ppb"),
-        lit_map(rm).alias("removal_conv_ppb"),
-        lit_map(re_ppm).alias("removal_effect_ppm"),
-        lit_map(
-            {
-                c: (0 if tot_re == 0 else (1000000 * re_ppm[c]) // tot_re)
-                for c in _ATTR_CH
-            }
-        ).alias("attribution_share_ppm"),
+    share = {c: 0 if tot_re == 0 else (1000000 * re_ppm[c]) // tot_re for c in _ATTR_CH}
+    return spark.createDataFrame(
+        [(c, base, rm[c], re_ppm[c], share[c]) for c in _ATTR_CH],
+        "channel string, base_conv_ppb bigint, removal_conv_ppb bigint, "
+        "removal_effect_ppm bigint, attribution_share_ppm bigint",
     )
 
 
@@ -3902,6 +3902,9 @@ def quantile_treatment_effects(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- iterative proportional fitting (raking) ---------------------------------
 
 _IPF_ROUNDS = 6
+# (brand, returnflag) cells collected. TPC-H has 25 brands x 3 flags, so 75
+# rows; 4096 admits 1000 brands at 4 flags, still a few ms per round.
+_IPF_MAX_CELLS = 4096
 
 
 def _ipf_oracle() -> str:
@@ -3962,72 +3965,53 @@ def _ipf_oracle() -> str:
     "ppm each half-step (identical IEEE factors both engines); ships the "
     "effective-sample-size diagnostic (Kish ESS, milli-frozen) and the "
     "worst row-margin error in bp so the caller sees both convergence "
-    "and the variance cost of the weights. Everything after the ONE "
-    "corpus aggregate is (brands x flags)-grid arithmetic. Oracle = the "
-    "rounds unrolled as materialized CTEs.",
+    "and the variance cost of the weights. The ONE corpus aggregate "
+    "builds the (brands x flags) grid, which is collected once; the "
+    "rounds run on the driver. Oracle = the rounds unrolled as "
+    "materialized CTEs.",
 )
 def ipf_raking_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = t(spark, sf_dir, "lineitem")
     part = t(spark, sf_dir, "part")
-    cells = (
+    grid = (
         li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
         .groupBy(F.col("p_brand").alias("brand"), F.col("l_returnflag").alias("flag"))
-        .agg(F.count("*").cast("bigint").alias("n"))
-        .localCheckpoint(eager=True)
+        .agg(F.count("*").alias("n"))
     )
-    tot = cells.agg(
-        F.sum("n").cast("bigint").alias("nt"),
-        F.countDistinct("brand").cast("bigint").alias("nb"),
+    cells = [
+        tuple(r) for r in collect_bounded(grid, _IPF_MAX_CELLS, "ipf_raking_weights")
+    ]
+    schema = (
+        "brand string, flag string, n bigint, weight_ppm bigint, "
+        "ess_milli bigint, max_margin_err_bp bigint"
     )
-    ft = cells.groupBy("flag").agg(F.sum("n").cast("bigint").alias("tf"))
-    w = cells.select("brand", "flag", "n", F.lit(1000000).cast("bigint").alias("w"))
+    if not cells:
+        return spark.createDataFrame([], schema)
+    # the oracle's (nt / nb): both counts convert to double before dividing
+    target = float(sum(n for _, _, n in cells)) / len({br for br, _, _ in cells})
+    tf = Counter()
+    for _, fl, n in cells:
+        tf[fl] += n
+    w = [1000000] * len(cells)
+
+    def margin(k: int) -> Counter:  # sum(n * w) grouped by cell field k
+        m = Counter()
+        for c, x in zip(cells, w):
+            m[c[k]] += c[2] * x
+        return m
+
     for _ in range(_IPF_ROUNDS):
-        rs = w.groupBy("brand").agg(F.sum(F.expr("n * w")).cast("bigint").alias("rs"))
-        w = (
-            w.join(rs, "brand")
-            .crossJoin(F.broadcast(tot))
-            .select(
-                "brand",
-                "flag",
-                "n",
-                F.expr(
-                    "CAST(floor(w * ((nt / nb) * 1e6 / rs) + 0.5) AS BIGINT)"
-                ).alias("w"),
-            )
-        )
-        cs = w.groupBy("flag").agg(F.sum(F.expr("n * w")).cast("bigint").alias("cs"))
-        w = (
-            w.join(cs, "flag")
-            .join(F.broadcast(ft), "flag")
-            .select(
-                "brand",
-                "flag",
-                "n",
-                F.expr("CAST(floor(w * (tf * 1e6 / cs) + 0.5) AS BIGINT)").alias("w"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    stats = w.agg(
-        F.expr(
-            "CAST(floor(CAST(sum(n * w) AS DOUBLE) * sum(n * w) "
-            "/ sum(n * w * w) * 1e3 + 0.5) AS BIGINT)"
-        ).alias("ess_milli")
-    )
-    rowerr = (
-        w.groupBy("brand")
-        .agg(F.expr("CAST(sum(n * w) AS DOUBLE)").alias("rs"))
-        .crossJoin(F.broadcast(tot))
-        .agg(
-            F.expr(
-                "CAST(floor(max(abs(rs / 1e6 - nt / nb) / (nt / nb)) * 1e4 + 0.5)"
-                " AS BIGINT)"
-            ).alias("max_margin_err_bp")
-        )
-    )
-    return (
-        w.select("brand", "flag", "n", F.col("w").alias("weight_ppm"))
-        .crossJoin(F.broadcast(stats))
-        .crossJoin(F.broadcast(rowerr))
+        rs = margin(0)
+        w = [math.floor(x * (target * 1e6 / rs[c[0]]) + 0.5) for c, x in zip(cells, w)]
+        cs = margin(1)
+        w = [math.floor(x * (tf[c[1]] * 1e6 / cs[c[1]]) + 0.5) for c, x in zip(cells, w)]
+    sw = sum(n * x for (_, _, n), x in zip(cells, w))
+    sww = sum(n * x * x for (_, _, n), x in zip(cells, w))
+    ess = math.floor(float(sw) * sw / sww * 1e3 + 0.5)
+    worst = max(abs(x / 1e6 - target) / target for x in margin(0).values())
+    err = math.floor(worst * 1e4 + 0.5)
+    return spark.createDataFrame(
+        [(br, fl, n, x, ess, err) for (br, fl, n), x in zip(cells, w)], schema
     )
 
 
@@ -4675,6 +4659,9 @@ def seasonal_decompose_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- Huber robust trend (IRLS) -----------------------------------------------
 
 _HUBER_ROUNDS = 3
+# Daily rows collected: the purchase calendar (30 days in the fixtures);
+# 36600 admits a century of days at a few ms per round.
+_HUBER_MAX_DAYS = 36600
 # weighted-OLS fit over ppm-frozen weights (shared text; moments exact ints)
 _HUB_B = (
     "((CAST(sw AS DOUBLE) * swxy - CAST(swx AS DOUBLE) * swy) "
@@ -4747,71 +4734,52 @@ def _huber_oracle() -> str:
     "ols_value_trend, distribution-free like theil_sen but with an "
     "explicit efficiency/robustness dial). Weighted moments are exact "
     "BIGINT sums; fits are shared formula text; final intercept/slope/"
-    "MAD frozen to milli-cents with the downweighted-day count. All "
-    "rounds run on the calendar-bounded daily grid.",
+    "MAD frozen to milli-cents with the downweighted-day count. One "
+    "aggregate builds the calendar-bounded daily grid, which is "
+    "collected once; the rounds run on the driver.",
 )
 def huber_robust_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = t(spark, sf_dir, "events").where(F.col("event_type") == "purchase")
     d = ev.groupBy(F.to_date("ts").alias("day")).agg(
         F.sum(F.round(F.col("value") * 100).cast("bigint")).cast("bigint").alias("cents")
     )
-    s = d.select(
-        "day", "cents", F.row_number().over(Window.orderBy("day")).cast("bigint").alias("rn")
-    ).localCheckpoint(eager=True)
-    w = s.select("day", "cents", "rn", F.lit(1000000).cast("bigint").alias("w"))
-    fit = mad = res = None
+    # rn = row_number() OVER (ORDER BY day): position in the sorted calendar
+    days = sorted(collect_bounded(d, _HUBER_MAX_DAYS, "huber_robust_trend"))
+    cents = [r.cents for r in days]
+    schema = (
+        "n_days bigint, intercept_millicents bigint, slope_millicents_per_day bigint, "
+        "mad_millicents bigint, n_downweighted bigint"
+    )
+    if not cents:
+        return spark.createDataFrame([], schema)
+    rn = range(1, len(cents) + 1)
+    w = [1000000] * len(cents)
     for r in range(1, _HUBER_ROUNDS + 1):
-        m = w.agg(
-            F.sum("w").cast("bigint").alias("sw"),
-            F.sum(F.expr("w * rn")).cast("bigint").alias("swx"),
-            F.sum(F.expr("w * cents")).cast("bigint").alias("swy"),
-            F.sum(F.expr("w * rn * rn")).cast("bigint").alias("swxx"),
-            F.sum(F.expr("w * rn * cents")).cast("bigint").alias("swxy"),
-        )
-        fit = m.select(F.expr(_HUB_A).alias("a"), F.expr(_HUB_B).alias("b"))
-        res = w.crossJoin(F.broadcast(fit)).select(
-            "day", "cents", "rn", F.expr("abs(cents - (a + b * rn))").alias("ar")
-        )
-        ranked = res.select(
-            "ar",
-            F.row_number().over(Window.orderBy("ar", "day")).alias("k"),
-            F.count("*").over(Window.partitionBy()).alias("n"),
-        )
-        mad = ranked.where(F.expr("k = (5000 * (n - 1)) div 10000 + 1")).select(
-            F.col("ar").alias("mad")
-        )
+        sw = sum(w)
+        swx = sum(x * k for x, k in zip(w, rn))
+        swy = sum(x * c for x, c in zip(w, cents))
+        swxx = sum(x * k * k for x, k in zip(w, rn))
+        swxy = sum(x * k * c for x, k, c in zip(w, rn, cents))
+        # _HUB_B and _HUB_A: each integer moment converts to double where used
+        b = (float(sw) * swxy - float(swx) * swy) / (float(sw) * swxx - float(swx) * swx)
+        a = (float(swy) - b * swx) / sw
+        ar = [abs(c - (a + b * k)) for k, c in zip(rn, cents)]
+        # the (5000 * (n - 1)) div 10000 + 1-th smallest residual; ties in
+        # the (ar, day) order cannot change the value picked
+        mad = sorted(ar)[(5000 * (len(ar) - 1)) // 10000]
         if r < _HUBER_ROUNDS:
-            w = res.crossJoin(F.broadcast(mad)).select(
-                "day",
-                "cents",
-                "rn",
-                F.expr(
-                    "CASE WHEN ar <= CAST(1.345 AS DOUBLE) * mad THEN CAST(1000000 AS BIGINT) "
-                    "ELSE CAST(floor(CAST(1.345 AS DOUBLE) * mad / ar * 1e6 + 0.5) AS BIGINT) END"
-                ).alias("w"),
-            ).localCheckpoint(eager=True)
-    n_days = s.agg(F.count("*").cast("bigint").alias("n_days"))
-    ndw = res.crossJoin(F.broadcast(mad)).agg(
-        F.sum(
-            F.when(F.col("ar") > F.expr("CAST(1.345 AS DOUBLE) * mad"), 1).otherwise(0)
-        )
-        .cast("bigint")
-        .alias("n_downweighted")
+            w = [
+                1000000 if e <= 1.345 * mad else math.floor(1.345 * mad / e * 1e6 + 0.5)
+                for e in ar
+            ]
+    row = (
+        len(cents),
+        math.floor(a * 1e3 + 0.5),
+        math.floor(b * 1e3 + 0.5),
+        math.floor(mad * 1e3 + 0.5),
+        sum(e > 1.345 * mad for e in ar),
     )
-    return (
-        fit.crossJoin(mad)
-        .crossJoin(F.broadcast(n_days))
-        .crossJoin(F.broadcast(ndw))
-        .select(
-            "n_days",
-            F.expr("CAST(floor(a * 1e3 + 0.5) AS BIGINT)").alias("intercept_millicents"),
-            F.expr("CAST(floor(b * 1e3 + 0.5) AS BIGINT)").alias(
-                "slope_millicents_per_day"
-            ),
-            F.expr("CAST(floor(mad * 1e3 + 0.5) AS BIGINT)").alias("mad_millicents"),
-            "n_downweighted",
-        )
-    )
+    return spark.createDataFrame([row], schema)
 
 
 @register(
@@ -4956,6 +4924,10 @@ def column_entropy_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- Sinkhorn entropic optimal transport -------------------------------------
 
 _SK_ROUNDS = 8
+# Marginal rows collected (returned + kept quantity bins). TPC-H quantities
+# are 1..50, so 100 rows; 512 keeps the driver's rounds over the na x nb
+# kernel grid (at most 256^2 cells, 16 contractions) near a second.
+_SK_MAX_BINS = 512
 _SK_KM = "CAST(floor(exp(-abs(ai - bj) / CAST(5.0 AS DOUBLE)) * 1e6 + 0.5) AS BIGINT)"
 
 
@@ -5017,83 +4989,53 @@ def _sk_oracle() -> str:
     "order-dependent float accumulation exists anywhere. Outputs the "
     "entropic transport cost — the distribution distance that, unlike "
     "KL/PSI/JS (which compare bins pointwise), accounts for HOW FAR "
-    "mass must move, the right metric for ordinal drift. All work "
-    "after two marginal aggregates is (50x50)-grid-bounded.",
+    "mass must move, the right metric for ordinal drift. One corpus "
+    "aggregate builds both marginals; the 50x50 grid (kernel exp "
+    "evaluated in Spark over the distinct |i-j|) and its rounds then "
+    "run on the driver.",
 )
 def sinkhorn_distribution_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = t(spark, sf_dir, "lineitem")
-    ret = li.where(F.col("l_returnflag") == "R")
-    kept = li.where(F.col("l_returnflag") != "R")
-    na = ret.count()
-    nb = kept.count()
-    am = (
-        ret.groupBy(F.col("l_quantity").cast("bigint").alias("ai"))
-        .agg(F.expr(f"(1000000 * count(*)) div {na}").alias("ap"))
-        .localCheckpoint(eager=True)
-    )
-    bm = (
-        kept.groupBy(F.col("l_quantity").cast("bigint").alias("bj"))
-        .agg(F.expr(f"(1000000 * count(*)) div {nb}").alias("bp"))
-        .localCheckpoint(eager=True)
-    )
-    k = (
-        am.select("ai")
-        .crossJoin(bm.select("bj"))
-        .select("ai", "bj", F.expr(_SK_KM).alias("km"))
-        .localCheckpoint(eager=True)
-    )
-    v = bm.select("bj", F.lit(1000000).cast("bigint").alias("vm"))
-    u = None
-    for _ in range(_SK_ROUNDS):
-        su = (
-            k.join(v, "bj")
-            .groupBy("ai")
-            .agg(F.sum(F.expr("km * vm")).cast("bigint").alias("s"))
+    marg = li.groupBy(
+        (F.col("l_returnflag") == "R").alias("ret"),
+        F.col("l_quantity").cast("bigint").alias("q"),
+    ).agg(F.count("*").alias("n"))
+    a, b = {}, {}
+    for r in collect_bounded(marg, _SK_MAX_BINS, "sinkhorn_distribution_distance"):
+        if r.ret is not None:  # a NULL flag is neither returned nor kept
+            (a if r.ret else b)[r.q] = r.n
+    na, nb = sum(a.values()), sum(b.values())
+    ap = {i: (1000000 * n) // na for i, n in a.items()}
+    bp = {j: (1000000 * n) // nb for j, n in b.items()}
+    cells = [(i, j) for i in ap for j in bp]
+    cost = mass = None
+    if cells:
+        # the kernel only depends on |i - j|; Spark evaluates its exp
+        # (StrictMath), which libm's exp need not match at the last ulp, over
+        # an inline table that the driver plans and folds without a job
+        dist = ", ".join(f"({d}, 0)" for d in sorted({abs(i - j) for i, j in cells}))
+        kernel = spark.sql(f"SELECT ai, {_SK_KM} FROM VALUES {dist} AS d(ai, bj)")
+        kd = dict(kernel.collect())
+        km = {(i, j): kd[abs(i - j)] for i, j in cells}
+        v = {j: 1000000 for j in bp}
+        for _ in range(_SK_ROUNDS):
+            su = {i: sum(km[i, j] * v[j] for j in bp) for i in ap}
+            u = {i: math.floor(float(ap[i]) * 1e12 / su[i] + 0.5) for i in ap}
+            sv = {j: sum(km[i, j] * u[i] for i in ap) for j in bp}
+            v = {j: math.floor(float(bp[j]) * 1e12 / sv[j] + 0.5) for j in bp}
+        cost = sum(
+            math.floor(abs(i - j) * (u[i] / 1e6) * (k / 1e6) * (v[j] / 1e6) * 1e9 + 0.5)
+            for (i, j), k in km.items()
         )
-        u = (
-            am.join(su, "ai")
-            .select(
-                "ai",
-                F.expr("CAST(floor(CAST(ap AS DOUBLE) * 1e12 / s + 0.5) AS BIGINT)").alias(
-                    "um"
-                ),
-            )
-            .localCheckpoint(eager=True)
+        mass = sum(
+            math.floor((u[i] / 1e6) * (k / 1e6) * (v[j] / 1e6) * 1e9 + 0.5)
+            for (i, j), k in km.items()
         )
-        sv = (
-            k.join(u, "ai")
-            .groupBy("bj")
-            .agg(F.sum(F.expr("km * um")).cast("bigint").alias("s"))
-        )
-        v = (
-            bm.join(sv, "bj")
-            .select(
-                "bj",
-                F.expr("CAST(floor(CAST(bp AS DOUBLE) * 1e12 / s + 0.5) AS BIGINT)").alias(
-                    "vm"
-                ),
-            )
-            .localCheckpoint(eager=True)
-        )
-    cell = "(um / 1e6) * (km / 1e6) * (vm / 1e6)"
-    plan = (
-        k.join(u, "ai")
-        .join(v, "bj")
-        .select(
-            F.expr(f"CAST(floor(abs(ai - bj) * {cell} * 1e9 + 0.5) AS BIGINT)").alias(
-                "cost_n"
-            ),
-            F.expr(f"CAST(floor({cell} * 1e9 + 0.5) AS BIGINT)").alias("mass_n"),
-        )
+    return spark.createDataFrame(
+        [(len(ap), len(bp), cost, mass)],
+        "n_source_bins bigint, n_target_bins bigint, "
+        "transport_cost_nano bigint, transported_mass_nano bigint",
     )
-    nab = am.agg(F.count("*").cast("bigint").alias("n_source_bins")).crossJoin(
-        bm.agg(F.count("*").cast("bigint").alias("n_target_bins"))
-    )
-    agg = plan.agg(
-        F.sum("cost_n").cast("bigint").alias("transport_cost_nano"),
-        F.sum("mass_n").cast("bigint").alias("transported_mass_nano"),
-    )
-    return nab.crossJoin(agg)
 
 
 def _k_truss_oracle(k: int = 4, rounds: int = 5) -> str:
@@ -5184,6 +5126,9 @@ def k_truss_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- Bradley-Terry paired-comparison ranking ---------------------------------
 
 _BT_ROUNDS = 8
+# Ordered brand pairs collected. TPC-H has 25 brands, so at most 600 pairs;
+# 4096 admits 64 brands, whose 8 rounds stay ~30k driver steps.
+_BT_MAX_PAIRS = 4096
 # frozen MM pieces: per-pair denominator term and the raw update, both
 # single divisions over exact/frozen integers (identical text both engines)
 _BT_TERM = "CAST(floor(n_ij * 1e12 / (pi + pj) + 0.5) AS BIGINT)"
@@ -5251,7 +5196,8 @@ def _bt_oracle() -> str:
     "and raw updates freeze to integers (single divisions over frozen "
     "ppm strengths — no order-dependent float sums), strengths "
     "renormalize to exact ppm each round. The duel extraction is one "
-    "within-order self-join; everything after is (brands^2)-bounded. "
+    "within-order self-join aggregated to the (brands^2)-bounded pair "
+    "grid, which is collected once; the rounds run on the driver. "
     "Output: per-brand wins, games, converged strength, rank.",
 )
 def bradley_terry_preferences(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5265,10 +5211,9 @@ def bradley_terry_preferences(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("cents")
         )
-        .localCheckpoint(eager=True)
     )
     a, b = ob.alias("a"), ob.alias("b")
-    pairs = (
+    duels = (
         a.join(
             b,
             (F.col("a.ok") == F.col("b.ok"))
@@ -5276,47 +5221,30 @@ def bradley_terry_preferences(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("a.cents") > F.col("b.cents")),
         )
         .groupBy(F.col("a.brand").alias("i"), F.col("b.brand").alias("j"))
-        .agg(F.count("*").cast("bigint").alias("w"))
-        .localCheckpoint(eager=True)
+        .agg(F.count("*").alias("w"))
     )
-    p2 = pairs.select(F.col("i").alias("j"), F.col("j").alias("i"), F.col("w").alias("w2"))
-    nsym = (
-        pairs.join(p2, ["i", "j"], "left")
-        .select("i", "j", (F.col("w") + F.coalesce("w2", F.lit(0))).alias("n_ij"))
-        .localCheckpoint(eager=True)
-    )
-    wins = pairs.groupBy(F.col("i").alias("brand")).agg(F.sum("w").cast("bigint").alias("w"))
-    p = wins.select("brand", F.lit(40000).cast("bigint").alias("p"))
+    pairs = {
+        (r.i, r.j): r.w
+        for r in collect_bounded(duels, _BT_MAX_PAIRS, "bradley_terry_preferences")
+    }
+    nsym = {(i, j): w + pairs.get((j, i), 0) for (i, j), w in pairs.items()}
+    wins, games = Counter(), Counter()
+    for (i, j), w in pairs.items():
+        wins[i] += w
+        games[i] += nsym[i, j]
+    p = {brand: 40000 for brand in wins}
     for _ in range(_BT_ROUNDS):
-        x = p.select(F.col("brand").alias("i"), F.col("p").alias("pi"))
-        y = p.select(F.col("brand").alias("j"), F.col("p").alias("pj"))
-        d = (
-            nsym.join(x, "i")
-            .join(y, "j")
-            .groupBy(F.col("i").alias("brand"))
-            .agg(F.sum(F.expr(_BT_TERM)).cast("bigint").alias("d"))
-        )
-        raw = wins.join(d, "brand").select("brand", F.expr(_BT_RAW).alias("praw"))
-        tot = raw.agg(F.sum("praw").cast("bigint").alias("tp"))
-        p = (
-            raw.crossJoin(F.broadcast(tot))
-            .select("brand", F.expr("(1000000 * praw) div tp").alias("p"))
-            .localCheckpoint(eager=True)
-        )
-    games = nsym.groupBy(F.col("i").alias("brand")).agg(
-        F.sum("n_ij").cast("bigint").alias("games")
-    )
-    wr = Window.orderBy(F.desc("p"), "brand")
-    return (
-        p.join(wins, "brand")
-        .join(games, "brand")
-        .select(
-            "brand",
-            F.col("w").alias("wins"),
-            "games",
-            F.col("p").alias("strength_ppm"),
-            F.row_number().over(wr).cast("bigint").alias("rank"),
-        )
+        d = Counter()
+        for (i, j), n_ij in nsym.items():
+            if i in p and j in p:  # a brand that never wins has no strength
+                d[i] += math.floor(n_ij * 1e12 / (p[i] + p[j]) + 0.5)
+        raw = {br: math.floor(wins[br] * 1e12 / d[br] + 0.5) for br in d}
+        tp = sum(raw.values())
+        p = {br: (1000000 * x) // tp for br, x in raw.items()}
+    ranked = sorted(p, key=lambda br: (-p[br], br))
+    return spark.createDataFrame(
+        [(br, wins[br], games[br], p[br], k) for k, br in enumerate(ranked, 1)],
+        "brand string, wins bigint, games bigint, strength_ppm bigint, rank bigint",
     )
 
 

@@ -199,7 +199,8 @@ HEADLINE = [
     (
         "markov_stationary",
         "Markov steady state: one lag-window pass to the |states|^2 matrix "
-        "(bounded driver state), output is one aggregate + 1-row broadcast",
+        "(collected once under collect_bounded's row bound; the rounds run "
+        "on the driver), output is one aggregate + 1-row broadcast",
     ),
     (
         "logistic_regression_newton",
@@ -225,8 +226,9 @@ HEADLINE = [
     ),
     (
         "ipf_raking_weights",
-        "IPF raking (final half-step): margin-sum join + 1-row target "
-        "broadcast per scaling step over the bounded cell grid",
+        "IPF raking: one aggregate builds the (brand x flag) cell grid, "
+        "collected once under collect_bounded's row bound; the scaling "
+        "rounds run on the driver, so the plan is a scan of the driver-built rows",
     ),
     # round-5: single-partition-sort retirements (the plans that replaced
     # Exchange SinglePartition over raw rows — gated by plans.py since r05)

@@ -10,9 +10,15 @@ and the step-up structure of the BH rejection set.
 
 from __future__ import annotations
 
+import shutil
+
+import duckdb
+import pytest
 from pyspark.sql import functions as F
 
 from map_reduce_engine_spark.queries import REGISTRY
+from map_reduce_engine_spark.queries.base import collect_bounded
+from map_reduce_engine_spark.session import TABLES
 
 
 def _rows(spark, sf_dir, name):
@@ -1352,3 +1358,61 @@ def test_trimmed_mean_between_bounds(spark, sf_dir):
         F.max(F.round(F.col("o_totalprice") * 100).cast("bigint")),
     ).collect()[0]
     assert mn < row.trimmed_mean_cents < mx
+
+
+# Fixed-round loops that collect their bounded grid once and run the rounds
+# on the driver, and the Markov queries that share the bounded collect.
+_DRIVER_LOOPS = [
+    "sinkhorn_distribution_distance",
+    "bradley_terry_preferences",
+    "ipf_raking_weights",
+    "huber_robust_trend",
+]
+_MARKOV = ["markov_stationary", "markov_attribution_removal"]
+
+
+@pytest.mark.quick
+def test_collect_bounded_refuses_a_grid_over_its_bound(spark):
+    df = spark.range(5)
+    assert sorted(r.id for r in collect_bounded(df, 5, "five_row_grid")) == list(range(5))
+    with pytest.raises(ValueError, match="four_row_grid"):
+        collect_bounded(df, 4, "four_row_grid")
+
+
+@pytest.mark.quick
+def test_driver_loops_match_oracle_on_empty_facts(spark, sf_dir, tmp_path):
+    """Empty lineitem and events: Sinkhorn keeps its one row of zero bin
+    counts and NULL sums, the other loops return no rows, and the Markov
+    queries return their oracles' rows (NULL chain values, not a driver
+    ZeroDivisionError)."""
+    con = duckdb.connect()
+    for t in TABLES:
+        src, dst = f"{sf_dir}/{t}.parquet", f"{tmp_path}/{t}.parquet"
+        if t in ("lineitem", "events"):
+            con.execute(f"COPY (SELECT * FROM '{src}' LIMIT 0) TO '{dst}' (FORMAT PARQUET)")
+        else:
+            shutil.copy(src, dst)
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{dst}'")
+    for name in _DRIVER_LOOPS + _MARKOV:
+        sdf = REGISTRY[name].fn(spark, str(tmp_path))
+        rel = con.sql(REGISTRY[name].oracle)
+        idx = [rel.columns.index(c) for c in sdf.columns]
+        want = sorted(repr(tuple(r[i] for i in idx)) for r in rel.fetchall())
+        assert sorted(repr(tuple(r)) for r in sdf.collect()) == want, name
+    con.close()
+
+
+@pytest.mark.quick
+@pytest.mark.parametrize("name", _DRIVER_LOOPS)
+def test_driver_loop_runs_few_jobs(spark, sf_dir, name):
+    """The rounds run on the driver: building and collecting the query is a
+    handful of Spark jobs, not a localCheckpoint chain per round (23-116
+    jobs before)."""
+    sc = spark.sparkContext
+    group = f"driver-loop-{name}"
+    sc.setJobGroup(group, name)
+    try:
+        REGISTRY[name].fn(spark, sf_dir).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 10

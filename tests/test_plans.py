@@ -856,8 +856,6 @@ _SANCTIONED_NESTED_LOOP = {
     "onto the 15-row factor ranking",
     "hdr_histogram_quantiles": "broadcasts the 1-row count and the 3-row "
     "percentile targets; the exact side is the one-off audit rank",
-    "markov_attribution_removal": "|channels|-row literal output off "
-    "bounded driver state (the (|channels|+1)^2 transition matrix)",
     "dbscan_grid_clusters": "1-row density-threshold broadcast + the "
     "8-neighborhood adjacency join over the grid-bounded CORE-CELL set "
     "(cells, never points)",
@@ -884,8 +882,6 @@ _SANCTIONED_NESTED_LOOP = {
     "calendar-bounded daily grid (split search is a grid window)",
     "quantile_treatment_effects": "3-row percentile-target probe joined "
     "to the per-arm ranked rows (exact-percentile pick)",
-    "ipf_raking_weights": "1-row margin-target broadcasts over the "
-    "(brands x flags)-bounded cell grid each scaling half-step",
     "offline_policy_ips": "1-row estimator aggregates over the "
     "(strata x actions)-bounded replay grid",
     "cuped_variance_reduction": "crossJoins of the 1-row arm means and "
@@ -896,13 +892,6 @@ _SANCTIONED_NESTED_LOOP = {
     "bounded daily grid",
     "ljung_box_test": "1-row per-lag moment crossJoins over the "
     "calendar-bounded daily grid (7 bounded lag joins)",
-    "huber_robust_trend": "1-row fit/scale broadcasts per IRLS round "
-    "over the calendar-bounded daily grid",
-    "sinkhorn_distribution_distance": "50x50 grid-bounded kernel "
-    "crossJoin + 1-row marginal/cost aggregates (Sinkhorn scaling "
-    "rounds over the bounded grid)",
-    "bradley_terry_preferences": "1-row normalizer broadcast per MM "
-    "round over the |brands|^2-bounded duel grid",
     "restricted_mean_survival": "1-row area/count crossJoins over the "
     "calendar-bounded KM step table",
     "distribution_fit_mom": "1-row empirical-median broadcast into the "
@@ -988,12 +977,8 @@ _SANCTIONED_ROW_PYTHON = {"udtf_sentence_stats", "udtf_polymorphic_ngrams"}
 # genuinely raw fact rows through one task must be fixed (value-grid
 # rank-select / sharded prefix sums), not added here.
 _SANCTIONED_SINGLE_PARTITION = {
-    "huber_robust_trend": "IRLS rounds rank the checkpointed calendar-bounded"
-    " daily grid (~30 rows), not raw events",
     "greedy_max_coverage_docs": "final cumulative window over the k=5-row"
     " driver-built selection frame",
-    "bradley_terry_preferences": "final rank window over the checkpointed"
-    " 25-brand strength table",
     "pareto_frontier_parts": "phase-2 skyline merge: repartition(1) of the"
     " phase-1 per-partition-pruned candidate set (frontier-sized by"
     " construction; the documented two-phase skyline shape)",
