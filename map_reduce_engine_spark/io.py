@@ -10,8 +10,11 @@ parquet (columnar scan + predicate pushdown; the 100 TB path).
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 # --------------------------------------------------------------------------
 # Sources
@@ -120,7 +123,8 @@ def _normalize_ts(df: DataFrame, col: str) -> DataFrame:
     Fixture generations have shipped timestamps as TIMESTAMP(MICROS)
     (current), as int64 epoch-nanos (older runs, where Spark lacks a
     TIMESTAMP(NANOS) parquet type and must read nanos as long via
-    ``spark.sql.legacy.parquet.nanosAsLong``), as a tz-instant, or as DATE.
+    ``spark.sql.legacy.parquet.nanosAsLong``, which ``get_spark`` sets), as
+    a tz-instant, or as DATE.
     Sniff the physical type and normalize so every downstream query sees one
     schema. TIMESTAMP_NTZ keeps the value timezone-independent for oracle
     comparison.
@@ -153,14 +157,51 @@ def _normalize_ts(df: DataFrame, col: str) -> DataFrame:
     return df  # already timestamp_ntz
 
 
+# path -> ((newest st_mtime_ns, file count, total bytes), inferred schema)
+_schemas: dict[str, tuple[tuple[int, int, int], StructType]] = {}
+
+
+def _files_stamp(path: str) -> tuple[int, int, int] | None:
+    """(newest st_mtime_ns, file count, total bytes) of the files at
+    ``path``, or None when it names no local file or directory. A rewrite
+    of a file inside a ``*.parquet`` directory leaves the directory's own
+    mtime alone, so every file under it counts."""
+    if os.path.isfile(path):
+        st = os.stat(path)
+        return st.st_mtime_ns, 1, st.st_size
+    sts = [os.stat(os.path.join(d, f)) for d, _, files in os.walk(path) for f in files]
+    if not sts:
+        return None
+    return max(st.st_mtime_ns for st in sts), len(sts), sum(st.st_size for st in sts)
+
+
+def _read_parquet_pinned(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with the schema Spark inferred the first
+    time passed back through ``.schema()``: inference runs a job, the pinned
+    read runs none. The memo is re-filled when the files under ``path``
+    change (newest mtime, file count or total size)."""
+    # stamp before inferring: a rewrite in between pairs the new schema
+    # with the old stamp, which the next read misses and infers again.
+    # Concurrent readers at worst both infer and store a consistent pair.
+    stamp = _files_stamp(path)
+    if stamp is None:
+        return spark.read.parquet(path)
+    hit = _schemas.get(path)
+    if hit is not None and hit[0] == stamp:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _schemas[path] = (stamp, df.schema)
+    return df
+
+
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one synthetic fixture table by name (TESTDATA.md layout),
-    normalizing any timestamp column to TIMESTAMP_NTZ."""
-    ts_cols = _FIXTURE_TS_COLS.get(name, ())
-    if ts_cols:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    for col in ts_cols:
+    normalizing any timestamp column to TIMESTAMP_NTZ.
+
+    Repeat reads of an unchanged table run no schema-inference job (the
+    schema is pinned per path), and the session's conf is left as found."""
+    df = _read_parquet_pinned(spark, f"{sf_dir}/{name}.parquet")
+    for col in _FIXTURE_TS_COLS.get(name, ()):
         if col in df.columns:
             df = _normalize_ts(df, col)
     return df

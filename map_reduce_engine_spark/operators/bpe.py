@@ -45,7 +45,7 @@ from functools import reduce
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from map_reduce_engine_spark.conf import loop_conf
+from map_reduce_engine_spark.conf import checkpoint, loop_conf
 
 EOW = "</w>"  # end-of-word marker, merged like any other symbol
 
@@ -139,14 +139,15 @@ aggregate(
 
 
 def _train_rounds(words: DataFrame, n_merges: int) -> tuple[list[DataFrame], DataFrame]:
-    syms = word_symbol_arrays(words).localCheckpoint(eager=True)
     # The loop state is the VOCABULARY-sized word table. Size the loop to
     # the EXPLODED pair volume the per-round aggregate actually shuffles
     # (Σ symbols per word), not the word-type row count: the array-form
     # state is one row per word TYPE, ~8x fewer rows than the symbol
-    # stream. One cheap aggregate over the checkpointed seed.
-    n_syms = syms.agg(F.sum(F.size("syms"))).first()[0] or 0
-    with loop_conf(words.sparkSession, n_syms):
+    # stream. The sum is observed on the seed's checkpoint job.
+    syms, m = checkpoint(
+        word_symbol_arrays(words), n_syms=F.coalesce(F.sum(F.size("syms")), F.lit(0))
+    )
+    with loop_conf(words.sparkSession, m["n_syms"]):
         merge_rows, syms = _train_rounds_inner(syms, n_merges)
     return merge_rows, syms
 

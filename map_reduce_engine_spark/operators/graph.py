@@ -17,7 +17,11 @@ and each round's labels are eagerly ``localCheckpoint``-ed.
 
 Every loop here runs inside :func:`map_reduce_engine_spark.conf.loop_conf`,
 whose docstring holds the loop discipline they share (partition sizing,
-AQE off, invariants materialized once, checkpoint cadence).
+AQE off, invariants materialized once, checkpoint cadence). Where a loop
+needs a number — the edge count that sizes it, a round's changed or
+surviving rows — :func:`map_reduce_engine_spark.conf.checkpoint` observes
+it on the checkpoint job that materializes those rows, so no loop runs a
+job only to count.
 """
 
 from __future__ import annotations
@@ -27,7 +31,7 @@ import itertools
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from map_reduce_engine_spark.conf import loop_conf
+from map_reduce_engine_spark.conf import checkpoint, loop_conf
 
 # Fixed-round loops checkpoint their state every this many rounds, plus
 # the final round (see loop_conf).
@@ -66,8 +70,8 @@ def connected_components(
     even short of it (labels travel one hop per round), which is what a
     fixed-round unrolled oracle replays.
     """
-    und0 = _undirected(edges, src, dst).localCheckpoint(eager=True)
-    with loop_conf(edges.sparkSession, und0.count()) as nparts:
+    und0, m = checkpoint(_undirected(edges, src, dst))
+    with loop_conf(edges.sparkSession, m["rows"]) as nparts:
         und = und0.repartition(nparts, "a").localCheckpoint(eager=True)
 
         labels = (
@@ -78,26 +82,26 @@ def connected_components(
         )
 
         for _ in itertools.count() if max_iter is None else range(max_iter):
-            # each node proposes its current label to every neighbor
+            # each node proposes its current label to every neighbor; its
+            # own row carries the label it had, so the round's aggregate
+            # holds old and new side by side and the checkpoint job counts
+            # the changed labels
             proposals = (
                 und.join(labels, und.a == labels.node)
-                .select(F.col("b").alias("node"), F.col("component"))
+                .select(F.col("b").alias("node"), "component", F.lit(False).alias("own"))
             )
-            new_labels = (
-                labels.select("node", "component")
+            new_labels, m = checkpoint(
+                labels.select("node", "component", F.lit(True).alias("own"))
                 .union(proposals)
                 .groupBy("node")
-                .agg(F.min("component").alias("component"))
-                .localCheckpoint(eager=True)
+                .agg(
+                    F.min("component").alias("component"),
+                    F.min(F.when(F.col("own"), F.col("component"))).alias("old"),
+                ),
+                changed=F.count(F.when(F.col("component") != F.col("old"), 1)),
             )
-            changed = (
-                new_labels.alias("n")
-                .join(labels.alias("o"), "node")
-                .where(F.col("n.component") != F.col("o.component"))
-                .count()
-            )
-            labels = new_labels
-            if changed == 0:
+            labels = new_labels.select("node", "component")
+            if m["changed"] == 0:
                 break
     return labels
 
@@ -156,10 +160,8 @@ def hits(
             f"hits() needs iterations >= 1 (got {iterations}): auth scores "
             "only exist after the first half-step"
         )
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).localCheckpoint(
-        eager=True
-    )
-    with loop_conf(edges.sparkSession, e.count()) as nparts:
+    e, m = checkpoint(edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")))
+    with loop_conf(edges.sparkSession, m["rows"]) as nparts:
         e_src = e.repartition(nparts, "src").localCheckpoint(eager=True)
         e_dst = e.repartition(nparts, "dst").localCheckpoint(eager=True)
         nodes = (
@@ -235,10 +237,10 @@ def sssp(
     small radius is the usual production choice — distances beyond it read
     NULL).
     """
-    e = edges.select(
-        F.col(src).alias("src"), F.col(dst).alias("dst"), F.col(weight).alias("w")
-    ).localCheckpoint(eager=True)
-    with loop_conf(edges.sparkSession, e.count()) as nparts:
+    e, m = checkpoint(
+        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"), F.col(weight).alias("w"))
+    )
+    with loop_conf(edges.sparkSession, m["rows"]) as nparts:
         we = e.repartition(nparts, "src").localCheckpoint(eager=True)
         # seeds union in: an isolated seed (no incident edges) must still
         # carry its distance-0 row — "seeds carry distance 0" holds even
@@ -354,8 +356,8 @@ def bfs_distances(
     empty frontier makes the remaining rounds no-ops rather than
     early-exiting (no per-round driver count job).
     """
-    und0 = _undirected(edges, src, dst).distinct().localCheckpoint(eager=True)
-    with loop_conf(edges.sparkSession, und0.count()) as nparts:
+    und0, m = checkpoint(_undirected(edges, src, dst).distinct())
+    with loop_conf(edges.sparkSession, m["rows"]) as nparts:
         und = und0.repartition(nparts, "a").localCheckpoint(eager=True)
         dist = seeds.select(
             F.col(seeds.columns[0]).alias("node"), F.lit(0).cast("bigint").alias("dist")
@@ -397,8 +399,8 @@ def label_propagation(
     top-1 window over the aggregate — all keyed shuffles bounded by the
     label-histogram size.
     """
-    und0 = _undirected(edges, src, dst).localCheckpoint(eager=True)
-    with loop_conf(edges.sparkSession, und0.count()) as nparts:
+    und0, m = checkpoint(_undirected(edges, src, dst))
+    with loop_conf(edges.sparkSession, m["rows"]) as nparts:
         und = und0.repartition(nparts, "a").localCheckpoint(eager=True)
         labels = (
             und.select(F.col("a").alias("node"))
@@ -442,8 +444,8 @@ def k_core(
     step is an equi-join/hash-agg — the peel scales as O(rounds)
     co-partitioned shuffles at any graph size.
     """
-    und0 = _undirected(edges, src, dst).localCheckpoint(eager=True)
-    n_edges = und0.count()
+    und0, m = checkpoint(_undirected(edges, src, dst))
+    n_edges = m["rows"]
     with loop_conf(edges.sparkSession, n_edges) as nparts:
         und = und0.repartition(nparts, "a").localCheckpoint(eager=True)
         for _ in range(max_iter):
@@ -453,16 +455,14 @@ def k_core(
                 .where(F.col("deg") >= k)
                 .select("a")
             )
-            survivors = (
-                und.join(keep, "a", "left_semi")
-                .join(keep.select(F.col("a").alias("b")), "b", "left_semi")
-                .localCheckpoint(eager=True)
+            und, m = checkpoint(
+                und.join(keep, "a", "left_semi").join(
+                    keep.select(F.col("a").alias("b")), "b", "left_semi"
+                )
             )
-            n_surv = survivors.count()
-            und = survivors
-            if n_surv == n_edges:
+            if m["rows"] == n_edges:
                 break
-            n_edges = n_surv
+            n_edges = m["rows"]
     return und.groupBy(F.col("a").alias("node")).agg(
         F.count("*").cast("bigint").alias("core_degree")
     )
@@ -492,10 +492,8 @@ def personalized_pagerank(
     of ranks to edges on the source + one hash aggregate on the
     destination — two shuffles per round, both on node keys.
     """
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).localCheckpoint(
-        eager=True
-    )
-    with loop_conf(edges.sparkSession, e.count()) as nparts:
+    e, m = checkpoint(edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")))
+    with loop_conf(edges.sparkSession, m["rows"]) as nparts:
         out_deg = e.groupBy("src").agg(F.count("*").alias("out_deg"))
         # the edges⋈degrees join is loop-invariant: attach out_deg to each
         # edge ONCE, so every round is a single equi-join
@@ -570,8 +568,8 @@ def k_truss(
     SURVIVING subgraph is recomputed for the output. Checkpointed rounds,
     early break at fixpoint, as in k_core.
     """
-    e = edges.select("u", "v").localCheckpoint(eager=True)
-    prev_n = e.count()
+    e, m = checkpoint(edges.select("u", "v"))
+    prev_n = m["rows"]
 
     def support(ed: DataFrame) -> DataFrame:
         e1, e2, e3 = ed.alias("e1"), ed.alias("e2"), ed.alias("e3")
@@ -594,17 +592,14 @@ def k_truss(
 
     with loop_conf(edges.sparkSession, prev_n):
         for _ in range(max_iter):
-            s = support(e)
-            e = (
-                e.join(s, ["u", "v"])
+            e, m = checkpoint(
+                e.join(support(e), ["u", "v"])
                 .where(F.col("n_triangles") >= k - 2)
                 .select("u", "v")
-                .localCheckpoint(eager=True)
             )
-            n = e.count()
-            if n == prev_n:
+            if m["rows"] == prev_n:
                 break
-            prev_n = n
+            prev_n = m["rows"]
         out = e.join(support(e), ["u", "v"], "left").select(
             "u", "v", F.coalesce("n_triangles", F.lit(0)).cast("bigint").alias("n_triangles")
         )

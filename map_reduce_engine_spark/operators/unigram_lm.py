@@ -79,7 +79,7 @@ from typing import Iterator
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from map_reduce_engine_spark.conf import loop_conf
+from map_reduce_engine_spark.conf import checkpoint, loop_conf
 
 PIECE_MAX_LEN = 4
 WORD_LEN_CAP = 16  # trainable-token length cap (SentencePiece practice)
@@ -131,11 +131,10 @@ def sized_loop(words: DataFrame) -> Iterator[DataFrame]:
     O(len_cap · PIECE_MAX_LEN) rows ≈ 80·|words|).
 
     The shared preamble of :func:`unigram_train`, :func:`unigram_segment`,
-    and the registry's n-best enumeration. The ``count()`` is a
-    dictionary-sized driver action (the sanctioned bounded-sizing
-    pattern)."""
-    w = trainable_words(words).localCheckpoint(eager=True)
-    with loop_conf(w.sparkSession, w.count() * 80):
+    and the registry's n-best enumeration. The dictionary's row count is
+    observed on the checkpoint job that freezes it (no count job)."""
+    w, m = checkpoint(trainable_words(words))
+    with loop_conf(w.sparkSession, m["rows"] * 80):
         yield w
 
 
@@ -496,9 +495,9 @@ def unigram_train(
     knobs by :func:`prune_rounds_for` when not given explicitly —
     guarantees the target is reached (70 → 53 → 40 in 2 rounds at the
     defaults; a 50k-seed / 32k-target production run gets its schedule
-    the same way). The mid-loop ``losses.count()`` is a vocabulary-sized
-    driver action — the same bounded-sizing pattern as the
-    partition-count probe below.
+    the same way). Each prune round's multi-char piece count is observed
+    on the checkpoint job of its loss table, as :func:`sized_loop`
+    observes the dictionary size.
     """
     if n_prune_rounds is None:
         n_prune_rounds = prune_rounds_for(n_seed_multi, target_multi)
@@ -509,7 +508,7 @@ def unigram_train(
         ).localCheckpoint(eager=True)
         for _ in range(n_prune_rounds):
             full = _reestimate(words, vocab)
-            losses = (
+            losses, m = checkpoint(
                 full.where(F.length("piece") > 1)
                 .join(piece_alt_costs(full), "piece")
                 .select(
@@ -517,9 +516,8 @@ def unigram_train(
                     "cnt",
                     (F.col("cnt") * (F.col("alt_cost") - F.col("cost"))).alias("loss"),
                 )
-                .localCheckpoint(eager=True)
             )
-            k = keep_count(losses.count(), target_multi)
+            k = keep_count(m["rows"], target_multi)
             keep = losses.orderBy(F.desc("loss"), "piece").limit(k).select("piece", "cnt")
             vocab = smoothed_costs(
                 full.where(F.length("piece") == 1).select("piece", "cnt").unionByName(keep)

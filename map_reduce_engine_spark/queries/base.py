@@ -11,10 +11,13 @@ Conventions that make the DuckDB-oracle hash comparison robust:
 
 from __future__ import annotations
 
-from collections.abc import Callable
+from collections.abc import Callable, Sequence
 from dataclasses import dataclass
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 from map_reduce_engine_spark.io import read_table
 
@@ -61,3 +64,16 @@ def collect_bounded(df: DataFrame, max_rows: int, query: str) -> list[Row]:
             f"{query}: driver-side grid exceeds its bound of {max_rows} rows"
         )
     return rows
+
+
+def local_rows(spark: SparkSession, rows: Sequence[Sequence], schema: str) -> DataFrame:
+    """Driver-built result rows as a local relation with the DDL ``schema``.
+
+    The rows go in as one Arrow table, which Spark plans as a
+    ``LocalRelation``: collecting it runs no job. ``spark.createDataFrame``
+    of a Python list plans as ``Scan ExistingRDD`` instead, and collecting
+    that runs one job with a Python worker task.
+    """
+    arrow = to_arrow_schema(StructType.fromDDL(schema))
+    cols = [pa.array([r[i] for r in rows], f.type) for i, f in enumerate(arrow)]
+    return spark.createDataFrame(pa.Table.from_arrays(cols, schema=arrow))

@@ -25,7 +25,8 @@ Fixed-round loops whose state is a domain-bounded grid (Markov chains,
 Sinkhorn, Bradley-Terry, IPF, Huber) build the grid in one aggregate,
 collect it once through ``base.collect_bounded`` and run their rounds in
 plain Python, replaying the oracle's frozen-integer arithmetic in the
-same operation order.
+same operation order; ``base.local_rows`` returns the result as a local
+relation, so collecting it runs no job.
 
 Scale shape: every query here is one or two hash aggregates over the fact
 table followed by arithmetic on a bounded grid (score levels, class
@@ -50,7 +51,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from map_reduce_engine_spark.operators import text as text_ops
-from map_reduce_engine_spark.queries.base import collect_bounded, register, t
+from map_reduce_engine_spark.queries.base import collect_bounded, local_rows, register, t
 
 # DuckDB twin of operators/text.py::langid — same marker-word argmax with
 # the same fixed-order tiebreak (shared with langid_confusion_matrix).
@@ -946,7 +947,7 @@ def kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
             df = df.select(
                 "vec_id", "v", F.least(F.col("dmin"), d2(F.col("v"), c)).alias("dmin")
             )
-    return spark.createDataFrame(rows, "sel_round bigint, vec_id bigint, sel_dist2 bigint")
+    return local_rows(spark, rows, "sel_round bigint, vec_id bigint, sel_dist2 bigint")
 
 
 # --- Markov stationary distribution ------------------------------------------
@@ -1911,7 +1912,8 @@ def markov_attribution_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     }
     tot_re = sum(re_ppm.values())
     share = {c: 0 if tot_re == 0 else (1000000 * re_ppm[c]) // tot_re for c in _ATTR_CH}
-    return spark.createDataFrame(
+    return local_rows(
+        spark,
         [(c, base, rm[c], re_ppm[c], share[c]) for c in _ATTR_CH],
         "channel string, base_conv_ppb bigint, removal_conv_ppb bigint, "
         "removal_effect_ppm bigint, attribution_share_ppm bigint",
@@ -3986,7 +3988,7 @@ def ipf_raking_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ess_milli bigint, max_margin_err_bp bigint"
     )
     if not cells:
-        return spark.createDataFrame([], schema)
+        return local_rows(spark, [], schema)
     # the oracle's (nt / nb): both counts convert to double before dividing
     target = float(sum(n for _, _, n in cells)) / len({br for br, _, _ in cells})
     tf = Counter()
@@ -4010,8 +4012,8 @@ def ipf_raking_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     ess = math.floor(float(sw) * sw / sww * 1e3 + 0.5)
     worst = max(abs(x / 1e6 - target) / target for x in margin(0).values())
     err = math.floor(worst * 1e4 + 0.5)
-    return spark.createDataFrame(
-        [(br, fl, n, x, ess, err) for (br, fl, n), x in zip(cells, w)], schema
+    return local_rows(
+        spark, [(br, fl, n, x, ess, err) for (br, fl, n), x in zip(cells, w)], schema
     )
 
 
@@ -4751,7 +4753,7 @@ def huber_robust_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         "mad_millicents bigint, n_downweighted bigint"
     )
     if not cents:
-        return spark.createDataFrame([], schema)
+        return local_rows(spark, [], schema)
     rn = range(1, len(cents) + 1)
     w = [1000000] * len(cents)
     for r in range(1, _HUBER_ROUNDS + 1):
@@ -4779,7 +4781,7 @@ def huber_robust_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         math.floor(mad * 1e3 + 0.5),
         sum(e > 1.345 * mad for e in ar),
     )
-    return spark.createDataFrame([row], schema)
+    return local_rows(spark, [row], schema)
 
 
 @register(
@@ -5031,7 +5033,8 @@ def sinkhorn_distribution_distance(spark: SparkSession, sf_dir: str) -> DataFram
             math.floor((u[i] / 1e6) * (k / 1e6) * (v[j] / 1e6) * 1e9 + 0.5)
             for (i, j), k in km.items()
         )
-    return spark.createDataFrame(
+    return local_rows(
+        spark,
         [(len(ap), len(bp), cost, mass)],
         "n_source_bins bigint, n_target_bins bigint, "
         "transport_cost_nano bigint, transported_mass_nano bigint",
@@ -5242,7 +5245,8 @@ def bradley_terry_preferences(spark: SparkSession, sf_dir: str) -> DataFrame:
         tp = sum(raw.values())
         p = {br: (1000000 * x) // tp for br, x in raw.items()}
     ranked = sorted(p, key=lambda br: (-p[br], br))
-    return spark.createDataFrame(
+    return local_rows(
+        spark,
         [(br, wins[br], games[br], p[br], k) for k, br in enumerate(ranked, 1)],
         "brand string, wins bigint, games bigint, strength_ppm bigint, rank bigint",
     )

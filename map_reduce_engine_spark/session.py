@@ -10,6 +10,11 @@ Defaults are chosen for the 100 TB posture:
   survives a 1000x scale-up without retuning shuffle partitions by hand.
 - Arrow on for any Python-boundary exchange (the map/reduce compat surface).
 - Session timezone pinned to UTC so results are oracle-comparable.
+- ``spark.sql.legacy.parquet.nanosAsLong`` on, so a parquet file holding
+  TIMESTAMP(NANOS) (older fixture generations of ``events``) reads as an
+  int64 epoch-nanos column that ``io.read_table`` normalizes, instead of
+  failing as an illegal parquet type. Set here, once per session, so no
+  reader changes the session it reads with.
 
 Python workers:
 - ``spark.python.daemon.module`` runs them under ``worker_daemon``, which
@@ -73,6 +78,7 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")

@@ -19,6 +19,7 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState
 
 from map_reduce_engine_spark.conf import scoped_conf
+from map_reduce_engine_spark.io import _read_parquet_pinned
 
 def _events_raw_schema(spark: SparkSession, sf_dir: str) -> T.StructType:
     """Physical schema of events.parquet for this fixture generation.
@@ -26,16 +27,16 @@ def _events_raw_schema(spark: SparkSession, sf_dir: str) -> T.StructType:
     ``readStream`` needs a user-supplied schema; sniff it from the batch
     reader so both the current TIMESTAMP(MICROS) fixtures and older
     int64-epoch-nanos ones (read as long via
-    ``spark.sql.legacy.parquet.nanosAsLong``) work unchanged.
+    ``spark.sql.legacy.parquet.nanosAsLong``, which ``get_spark`` sets)
+    work unchanged.
     """
-    return spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    return _read_parquet_pinned(spark, f"{sf_dir}/events.parquet").schema
 
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``readStream`` over the events parquet (file source; one file = one
     micro-batch under availableNow). Timestamp conversion identical to the
     batch reader (timezone-independent NTZ arithmetic)."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     schema = _events_raw_schema(spark, sf_dir)
     # the file stream source wants a directory; glob-filter to the events file
     raw = (

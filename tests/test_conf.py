@@ -1,6 +1,10 @@
-"""scoped_conf / loop_conf: restore semantics under nesting and overlap."""
+"""scoped_conf / loop_conf: restore semantics under nesting and overlap;
+checkpoint: counts observed on the checkpoint job, also across a retry."""
 
-from map_reduce_engine_spark.conf import loop_conf, scoped_conf
+from pyspark.sql import functions as F
+
+from map_reduce_engine_spark.conf import checkpoint, loop_conf, scoped_conf
+from map_reduce_engine_spark.operators.graph import connected_components
 
 import pytest
 
@@ -88,3 +92,54 @@ def test_failed_registration_leaves_no_phantom(spark):
     with scoped_conf(spark, {KEY: "5"}):
         assert spark.conf.get(KEY) == "5"
     assert spark.conf.get(KEY) == before
+
+
+def test_checkpoint_observes_counts_on_its_own_job(spark):
+    """The counts come back from the checkpoint job: one job, no count job
+    after it, and the metrics read 0 (not NULL) on an empty frame."""
+    df = spark.range(10).withColumn("odd", F.col("id") % 2 == 1)
+    sc = spark.sparkContext
+    sc.setJobGroup("checkpoint-observes", "checkpoint")
+    try:
+        out, m = checkpoint(df, odd=F.count(F.when(F.col("odd"), 1)))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert m == {"rows": 10, "odd": 5}
+    assert len(sc.statusTracker().getJobIdsForGroup("checkpoint-observes")) == 1
+    assert out.count() == 10
+    _, m = checkpoint(df.where("id < 0"), odd=F.count(F.when(F.col("odd"), 1)))
+    assert m == {"rows": 0, "odd": 0}
+
+
+def _flaky_edges(spark, edges):
+    """``edges`` through a ``mapInPandas`` whose first attempt of every task
+    emits its first batch and then raises, so the failed attempt has already
+    pushed rows past the observation when it dies."""
+    clean = spark.createDataFrame(edges, "id1 bigint, id2 bigint")
+
+    def flaky(batches):
+        from pyspark import TaskContext
+
+        first = TaskContext.get().attemptNumber() == 0
+        for b in batches:
+            yield b
+            if first:
+                raise RuntimeError("injected first-attempt failure")
+
+    return clean, clean.repartition(2).mapInPandas(flaky, clean.schema)
+
+
+def test_loop_round_survives_a_task_retry(spark):
+    """A task of the loop's input fails on its first attempt (the session's
+    master retries it once): the components equal the fault-free ones, the
+    retried task's rows are observed once, and the loop's AQE and
+    shuffle-partition overrides are restored afterwards."""
+    edges = [(1, 2), (2, 3), (4, 5), (6, 7), (7, 8), (8, 6), (9, 9)]
+    clean, faulty = _flaky_edges(spark, edges)
+    before = {k: spark.conf.get(k) for k in (KEY, AQE)}
+    want = {1: 1, 2: 1, 3: 1, 4: 4, 5: 4, 6: 6, 7: 6, 8: 6, 9: 9}
+    assert dict(connected_components(clean).collect()) == want
+    assert dict(connected_components(faulty).collect()) == want
+    assert {k: spark.conf.get(k) for k in (KEY, AQE)} == before
+    _, m = checkpoint(faulty)
+    assert m["rows"] == len(edges)

@@ -69,6 +69,9 @@ def test_winnow_empty_and_too_short(spark):
 
 
 def test_connected_components_empty(spark):
+    """Runs to its fixpoint (no round cap) and stops: the changed-label
+    count observed on the round's checkpoint reads 0 on no rows, where a
+    sum would read NULL and never equal 0."""
     from map_reduce_engine_spark.operators import connected_components
 
     edges = spark.createDataFrame([], "id1 bigint, id2 bigint")
@@ -252,6 +255,16 @@ def test_k_core_empty_edges(spark):
     edges = spark.createDataFrame([], "u BIGINT, v BIGINT")
     out = k_core(edges, k=3)
     assert out.columns == ["node", "core_degree"]
+    assert out.count() == 0
+
+
+def test_k_truss_empty_edges(spark):
+    """The peel stops on the surviving-edge count observed on each round's
+    checkpoint, which reads 0 on an empty edge list."""
+    from map_reduce_engine_spark.operators.graph import k_truss
+
+    out = k_truss(spark.createDataFrame([], "u BIGINT, v BIGINT"), k=3)
+    assert out.columns == ["u", "v", "n_triangles"]
     assert out.count() == 0
 
 

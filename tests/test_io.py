@@ -367,6 +367,46 @@ def test_read_table_tolerates_timestamp_encoding_drift(spark, tmp_path):
     assert got["date"] == datetime.datetime(2024, 1, 15), got  # midnight wall-clock
 
 
+def test_read_table_pins_the_schema_until_the_files_change(spark, tmp_path):
+    """A repeat read of an unchanged table runs no job (its inferred schema
+    is memoized); rewriting a file inside the table's directory in place,
+    with other columns, makes the next read infer the new schema."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    table = tmp_path / "docs.parquet"
+    table.mkdir()
+    pq.write_table(pa.table({"doc_id": [1, 2], "text": ["a", "b"]}), table / "part-0.parquet")
+    first = mio.read_table(spark, str(tmp_path), "docs")
+    sc = spark.sparkContext
+    sc.setJobGroup("read-table-memo", "second read")
+    try:
+        second = mio.read_table(spark, str(tmp_path), "docs")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("read-table-memo")) == 0
+    assert second.schema == first.schema
+    assert sorted(second.collect()) == [(1, "a"), (2, "b")]
+
+    pq.write_table(pa.table({"doc_id": [3], "lang": ["en"], "n": [7]}), table / "part-0.parquet")
+    third = mio.read_table(spark, str(tmp_path), "docs")
+    assert third.columns == ["doc_id", "lang", "n"]
+    assert third.collect() == [(3, "en", 7)]
+
+
+def test_read_table_leaves_the_session_conf_as_found(spark, sf_dir):
+    """Reading every fixture table, timestamp tables included, changes no
+    session setting (the nanos-as-long flag is get_spark's, not the
+    reader's: with it off, a reader that set it would show here)."""
+    from map_reduce_engine_spark.conf import scoped_conf
+
+    with scoped_conf(spark, {"spark.sql.legacy.parquet.nanosAsLong": "false"}):
+        before = spark.conf.getAll
+        for name in ("events", "orders", "lineitem", "documents"):
+            mio.read_table(spark, sf_dir, name)
+        assert spark.conf.getAll == before
+
+
 def test_xml_roundtrip(spark, sf_dir, tmp_path):
     """Spark 4's built-in XML source: a nation-table roundtrip preserves
     rows and types survive re-read (long keys come back as BIGINT)."""

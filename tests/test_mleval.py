@@ -1407,7 +1407,10 @@ def test_driver_loops_match_oracle_on_empty_facts(spark, sf_dir, tmp_path):
 def test_driver_loop_runs_few_jobs(spark, sf_dir, name):
     """The rounds run on the driver: building and collecting the query is a
     handful of Spark jobs, not a localCheckpoint chain per round (23-116
-    jobs before)."""
+    jobs before). The result is a local relation, whose collect runs no
+    job. The bound is the most any of them measured at sf0.001 (7,
+    bradley_terry_preferences) with its tables not yet read in the session,
+    when each first read still infers its schema."""
     sc = spark.sparkContext
     group = f"driver-loop-{name}"
     sc.setJobGroup(group, name)
@@ -1415,4 +1418,4 @@ def test_driver_loop_runs_few_jobs(spark, sf_dir, name):
         REGISTRY[name].fn(spark, sf_dir).collect()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 10
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 7
