@@ -2,21 +2,67 @@
 
     python -m map_reduce_engine_spark startjob <name> <job_module> \\
         <inputdir> <outputdir> [num_reducers]
+    python -m map_reduce_engine_spark {query,plan} <name> <sf_dir> ...
+    python -m map_reduce_engine_spark list
+    python -m map_reduce_engine_spark <job-verb> <sf_dir> <output_dir> [flags]
 
-``job_module`` is a Python module path exposing ``map_fn``/``reduce_fn``
-(see job.load_job_module) — the jar+reflection replacement. The reference's
-``master``/``slave`` bring-up verbs have no equivalent here: Spark's own
-cluster manager replaces them (SURVEY.md §3.2-3.3), so the only verb is the
-query path.
+``startjob`` is the reference's query path: ``job_module`` is a Python
+module path exposing ``map_fn``/``reduce_fn`` (see job.load_job_module) —
+the jar+reflection replacement. ``query``/``plan``/``list`` run, audit and
+list the registry. Each job verb (the ``JOBS`` table) runs one composed
+example under ``examples/``; a job flag left off the command line is not
+passed, so it takes its default from that job's ``run()``. Every verb that
+needs Spark goes through one session lifecycle: ``get_spark`` → work →
+``stop()`` in ``finally``. The reference's ``master``/``slave`` bring-up
+verbs have no equivalent here: Spark's own cluster manager replaces them
+(SURVEY.md §3.2-3.3).
 """
 
 from __future__ import annotations
 
 import argparse
+import importlib
 import sys
 
 from map_reduce_engine_spark.job import startjob
 from map_reduce_engine_spark.session import get_spark
+
+# job verb -> module under examples/ whose run(spark, sf_dir, out_dir, **flags)
+# returns the frame the verb shows
+JOBS = {
+    "corpus-pipeline": "corpus_pipeline_job",
+    "engagement-report": "engagement_report_job",
+    "training-mix": "training_mix_job",
+    "recommend": "recommender_job",
+    "feature-screen": "feature_screen_job",
+    "data-selection": "data_selection_job",
+    "incremental-ingest": "incremental_ingest_job",
+    "ann-serve": "ann_serve_job",
+    "retrieval-eval": "retrieval_eval_job",
+    "tokenizer-bakeoff": "tokenizer_bakeoff_job",
+    "model-eval": "model_eval_job",
+    "causal-audit": "causal_audit_job",
+    "timeseries-health": "timeseries_health_job",
+    "privacy-audit": "privacy_audit_job",
+    "group-comparison": "group_comparison_job",
+    "stream-monitor": "stream_monitor_job",
+}
+
+_METASTORE_HELP = (
+    "persist the catalog (derby metastore + warehouse under this dir) so the "
+    "daily loop chains across CLI runs — required for --prebuilt to resolve "
+    "yesterday's stored tables in a new process"
+)
+
+
+def _job(sub, verb: str, help: str, needs: str) -> argparse.ArgumentParser:
+    """Subparser for a job verb. Its flags default to SUPPRESS: a flag left
+    off the command line never reaches ``run()``."""
+    assert verb in JOBS, verb
+    p = sub.add_parser(verb, help=help, argument_default=argparse.SUPPRESS)
+    p.add_argument("sf_dir", help=f"fixture dir containing {needs}")
+    p.add_argument("output_dir")
+    return p
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -43,74 +89,84 @@ def main(argv: list[str] | None = None) -> int:
     pl.add_argument("name", help="registry name (see `list`)")
     pl.add_argument("sf_dir", help="directory of fixture parquet tables")
     pl.add_argument("--full", action="store_true", help="print the whole formatted plan")
-    cp = sub.add_parser(
+    cp = _job(
+        sub,
         "corpus-pipeline",
-        help="run the end-to-end corpus prep example (quality gate → exact "
+        "run the end-to-end corpus prep example (quality gate → exact "
         "dedup → near dedup → split → partitioned write)",
+        "documents.parquet",
     )
-    cp.add_argument("sf_dir", help="fixture dir containing documents.parquet")
-    cp.add_argument("output_dir")
-    cp.add_argument("--min-quality", type=float, default=0.3)
-    cp.add_argument("--jaccard", type=float, default=0.85)
-    er = sub.add_parser(
+    cp.add_argument("--min-quality", type=float)
+    cp.add_argument("--jaccard", type=float, dest="jaccard_threshold", metavar="JACCARD")
+    _job(
+        sub,
         "engagement-report",
-        help="run the end-to-end engagement analytics example (streaks + "
+        "run the end-to-end engagement analytics example (streaks + "
         "bitmaps + burstiness per-user profile, conversion cohorts)",
+        "events.parquet",
     )
-    er.add_argument("sf_dir", help="fixture dir containing events.parquet")
-    er.add_argument("output_dir")
-    tm = sub.add_parser(
+    _job(
+        sub,
         "training-mix",
-        help="run the end-to-end training-mix governance example "
+        "run the end-to-end training-mix governance example "
         "(temperature weights + token budgets + leakage-audited splits + "
         "split-drift JS, with a sign-off gate)",
+        "documents.parquet",
     )
-    tm.add_argument("sf_dir", help="fixture dir containing documents.parquet")
-    tm.add_argument("output_dir")
-    rc = sub.add_parser(
+    rc = _job(
+        sub,
         "recommend",
-        help="run the end-to-end item-to-item recommender example "
+        "run the end-to-end item-to-item recommender example "
         "(co-purchase top-5 per customer + leave-one-out hit-rate "
         "evaluation, with a deploy gate)",
+        "orders/lineitem parquet",
     )
-    rc.add_argument("sf_dir", help="fixture dir containing orders/lineitem parquet")
-    rc.add_argument("output_dir")
-    rc.add_argument("--min-hitrate-ppm", type=int, default=100_000)
-    fs = sub.add_parser(
+    rc.add_argument("--min-hitrate-ppm", type=int)
+    fs = _job(
+        sub,
         "feature-screen",
-        help="run the end-to-end feature-screening example (1R stump + "
+        "run the end-to-end feature-screening example (1R stump + "
         "exact AUC screen + mutual information + closed-form regression, "
         "with a sign-off gate)",
+        "the TPC-H parquet",
     )
-    fs.add_argument("sf_dir", help="fixture dir containing the TPC-H parquet")
-    fs.add_argument("output_dir")
-    fs.add_argument("--min-auc-edge-ppm", type=int, default=5_000)
-    dsel = sub.add_parser(
+    fs.add_argument("--min-auc-edge-ppm", type=int)
+    dsel = _job(
+        sub,
         "data-selection",
-        help="run the end-to-end pretraining data-selection example (DSIR "
+        "run the end-to-end pretraining data-selection example (DSIR "
         "importance resampling + within-selection near-dup audit + "
         "contamination screen + distinct-n diversity, with a sign-off gate)",
+        "documents.parquet",
     )
-    dsel.add_argument("sf_dir", help="fixture dir containing documents.parquet")
-    dsel.add_argument("output_dir")
-    dsel.add_argument("--max-dup-pairs", type=int, default=5)
-    dsel.add_argument("--max-contaminated", type=int, default=10)
-    inc = sub.add_parser(
+    dsel.add_argument("--max-dup-pairs", type=int)
+    dsel.add_argument("--max-contaminated", type=int)
+    inc = _job(
+        sub,
         "incremental-ingest",
-        help="run the daily-crawl incremental ingest example (batch-internal "
+        "run the daily-crawl incremental ingest example (batch-internal "
         "substring dedup → persisted tile-index probe + rewrite → "
         "incremental MinHash near-dup probe → eval decontamination → "
         "append payload + rolled-forward index, with a sign-off gate)",
+        "documents.parquet",
     )
-    inc.add_argument("sf_dir", help="fixture dir containing documents.parquet")
-    inc.add_argument("output_dir")
-    inc.add_argument("--k", type=int, default=50, help="substring tile length")
-    inc.add_argument("--jaccard", type=float, default=0.7)
-    inc.add_argument("--max-near-dup-bp", type=int, default=2500)
-    inc.add_argument("--max-contaminated", type=int, default=10)
-    inc.add_argument("--index-table", default="mre_tile_index")
-    inc.add_argument("--eval-dir", default=None, help="separately stored benchmark suite (a dir with documents.parquet) for the decontamination screen — with it a prebuilt run never reads history text; sf_dir can be just today's crawl")
-    inc.add_argument("--metastore-dir", default=None, help="persist the catalog (derby metastore + warehouse under this dir) so the daily loop chains across CLI runs — required for --prebuilt to resolve yesterday's stored tables in a new process")
+    inc.add_argument("--k", type=int, help="substring tile length")
+    inc.add_argument("--jaccard", type=float, dest="jaccard_threshold", metavar="JACCARD")
+    inc.add_argument("--max-near-dup-bp", type=int)
+    inc.add_argument(
+        "--max-contaminated",
+        type=int,
+        dest="max_contaminated_docs",
+        metavar="MAX_CONTAMINATED",
+    )
+    inc.add_argument("--index-table")
+    inc.add_argument(
+        "--eval-dir",
+        help="separately stored benchmark suite (a dir with documents.parquet) "
+        "for the decontamination screen — with it a prebuilt run never reads "
+        "history text; sf_dir can be just today's crawl",
+    )
+    inc.add_argument("--metastore-dir", help=_METASTORE_HELP)
     inc.add_argument(
         "--prebuilt",
         action="store_true",
@@ -119,21 +175,21 @@ def main(argv: list[str] | None = None) -> int:
         "from the history; needs a FRESH output_dir per day (the run "
         "refuses to overwrite the files backing the stored tables)",
     )
-    ann = sub.add_parser(
+    ann = _job(
+        sub,
         "ann-serve",
-        help="run the ANN serving example (train + persist the IVF index on "
+        "run the ANN serving example (train + persist the IVF index on "
         "the history → roll today's batch forward with no retrain → "
         "staleness diagnostic → serve queries from the stored index → "
         "recall report vs exact kNN, with a sign-off gate)",
+        "embeddings.parquet",
     )
-    ann.add_argument("sf_dir", help="fixture dir containing embeddings.parquet")
-    ann.add_argument("output_dir")
-    ann.add_argument("--k", type=int, default=10)
-    ann.add_argument("--n-probe", type=int, default=4)
-    ann.add_argument("--batch-size", type=int, default=50)
-    ann.add_argument("--min-recall-permille", type=int, default=500)
-    ann.add_argument("--index-table", default="mre_ivf_index")
-    ann.add_argument("--metastore-dir", default=None, help="persist the catalog (derby metastore + warehouse under this dir) so the daily loop chains across CLI runs — required for --prebuilt to resolve yesterday's stored tables in a new process")
+    ann.add_argument("--k", type=int)
+    ann.add_argument("--n-probe", type=int)
+    ann.add_argument("--batch-size", type=int)
+    ann.add_argument("--min-recall-permille", type=int)
+    ann.add_argument("--index-table")
+    ann.add_argument("--metastore-dir", help=_METASTORE_HELP)
     ann.add_argument(
         "--prebuilt",
         action="store_true",
@@ -142,91 +198,88 @@ def main(argv: list[str] | None = None) -> int:
         "unless the staleness gate demands it; needs a FRESH output_dir "
         "per day (the run refuses to overwrite the stored table's files)",
     )
-    ann.add_argument("--rows-per-cell", type=int, default=4096)
+    ann.add_argument("--rows-per-cell", type=int)
     ann.add_argument(
         "--recall-queries",
         type=int,
-        default=None,
         help="bound the exact-kNN recall audit to the N smallest query "
         "ids (0 skips the audit; default audits every query — one full "
         "corpus scan per audit)",
     )
-    rev = sub.add_parser(
+    rev = _job(
+        sub,
         "retrieval-eval",
-        help="run the end-to-end retrieval-evaluation example (BM25 + "
+        "run the end-to-end retrieval-evaluation example (BM25 + "
         "Dirichlet query-likelihood lexical rankers with agreement, dense "
         "nDCG@10/MRR@10 probe eval, Rocchio feedback lift, with a "
         "sign-off gate)",
+        "documents/embeddings parquet",
     )
-    rev.add_argument(
-        "sf_dir", help="fixture dir containing documents/embeddings parquet"
-    )
-    rev.add_argument("output_dir")
-    rev.add_argument("--min-mean-ndcg-ppm", type=int, default=0)
-    rev.add_argument("--min-common-at20", type=int, default=1)
-    tkb = sub.add_parser(
+    rev.add_argument("--min-mean-ndcg-ppm", type=int)
+    rev.add_argument("--min-common-at20", type=int)
+    tkb = _job(
+        sub,
         "tokenizer-bakeoff",
-        help="run the end-to-end tokenizer bake-off example (BPE vs "
+        "run the end-to-end tokenizer bake-off example (BPE vs "
         "unigram-LM trained on the same dictionary: per-source fertility, "
         "vocab utilization, per-domain winners, with a sign-off gate)",
+        "documents.parquet",
     )
-    tkb.add_argument("sf_dir", help="fixture dir containing documents.parquet")
-    tkb.add_argument("output_dir")
-    tkb.add_argument("--max-fertility-ppm", type=int, default=10_000_000)
-    me = sub.add_parser(
+    tkb.add_argument("--max-fertility-ppm", type=int)
+    me = _job(
+        sub,
         "model-eval",
-        help="run the end-to-end model-evaluation example (Newton-trained "
+        "run the end-to-end model-evaluation example (Newton-trained "
         "logistic model + AP/gains ranking quality + Brier/reliability "
         "calibration + fairness audit with BH-FDR, with a ship gate)",
+        "the TPC-H parquet",
     )
-    me.add_argument("sf_dir", help="fixture dir containing the TPC-H parquet")
-    me.add_argument("output_dir")
-    me.add_argument("--max-calib-gap-ppm", type=int, default=300_000)
-    ca = sub.add_parser(
+    me.add_argument("--max-calib-gap-ppm", type=int)
+    ca = _job(
+        sub,
         "causal-audit",
-        help="run the end-to-end causal-audit example (DID + stratified/"
+        "run the end-to-end causal-audit example (DID + stratified/"
         "IPW/naive ATE trio + regression discontinuity + mediation + "
         "Oaxaca-Blinder, with a confounding flag)",
+        "the TPC-H parquet",
     )
-    ca.add_argument("sf_dir", help="fixture dir containing the TPC-H parquet")
-    ca.add_argument("output_dir")
-    ca.add_argument("--confounding-tol-ppm", type=int, default=2_000)
-    th = sub.add_parser(
+    ca.add_argument("--confounding-tol-ppm", type=int)
+    th = _job(
+        sub,
         "timeseries-health",
-        help="run the end-to-end time-series health example (Mann-Kendall "
+        "run the end-to-end time-series health example (Mann-Kendall "
         "+ Huber trend + runs/Ljung-Box randomness + changepoint + "
         "seasonal decomposition + Holt forecast, with an iid gate)",
+        "events.parquet",
     )
-    th.add_argument("sf_dir", help="fixture dir containing events.parquet")
-    th.add_argument("output_dir")
-    th.add_argument("--max-changepoint-share-bp", type=int, default=5000)
-    pa = sub.add_parser(
+    th.add_argument("--max-changepoint-share-bp", type=int)
+    pa = _job(
+        sub,
         "privacy-audit",
-        help="run the end-to-end privacy release audit (k-anonymity + "
+        "run the end-to-end privacy release audit (k-anonymity + "
         "l-diversity + t-closeness ladder + DP release counts, with a "
         "release gate)",
+        "customer.parquet",
     )
-    pa.add_argument("sf_dir", help="fixture dir containing customer.parquet")
-    pa.add_argument("output_dir")
-    pa.add_argument("--max-at-risk-share", type=float, default=0.05)
-    pa.add_argument("--min-l", type=int, default=3)
-    pa.add_argument("--max-t-ppm", type=int, default=300_000)
-    gc = sub.add_parser(
+    pa.add_argument("--max-at-risk-share", type=float)
+    pa.add_argument("--min-l", type=int)
+    pa.add_argument("--max-t-ppm", type=int)
+    _job(
+        sub,
         "group-comparison",
-        help="run the assumption-gated multi-group comparison dossier "
+        "run the assumption-gated multi-group comparison dossier "
         "(ANOVA + Brown-Forsythe gate + Tukey HSD post-hoc + "
         "Kruskal-Wallis + Friedman, with a verdict gate)",
+        "events.parquet",
     )
-    gc.add_argument("sf_dir", help="fixture dir containing events.parquet")
-    gc.add_argument("output_dir")
-    sm = sub.add_parser(
+    sm = _job(
+        sub,
         "stream-monitor",
-        help="drain the bounded-state streaming monitors (error-rate SLA + "
+        "drain the bounded-state streaming monitors (error-rate SLA + "
         "CUSUM drift + KMV reach + Misra-Gries hot keys) into one ops gate",
+        "events.parquet",
     )
-    sm.add_argument("sf_dir", help="fixture dir containing events.parquet")
-    sm.add_argument("output_dir")
-    sm.add_argument("--cusum-alarm-cents", type=int, default=100_000)
+    sm.add_argument("--cusum-alarm-cents", type=int)
     args = parser.parse_args(argv)
 
     if args.verb == "list":
@@ -237,30 +290,45 @@ def main(argv: list[str] | None = None) -> int:
             print(f"{name}\t{kind}")
         return 0
 
-    if args.verb == "query":
+    flags = dict(vars(args))
+    verb = flags.pop("verb")
+    if verb in JOBS:
+        app_name = f"mre-{verb}"
+        run = importlib.import_module(f"map_reduce_engine_spark.examples.{JOBS[verb]}").run
+    elif verb == "startjob":
+        app_name = f"mre-job-{args.name}"
+    else:  # query / plan
         from map_reduce_engine_spark.queries import REGISTRY
 
         if args.name not in REGISTRY:
             parser.error(f"unknown query {args.name!r}; run `list`")
-        spark = get_spark(app_name=f"mre-query-{args.name}")
-        try:
+        app_name = f"mre-{verb}-{args.name}"
+
+    spark = get_spark(app_name=app_name, metastore_dir=flags.pop("metastore_dir", None))
+    try:
+        if verb in JOBS:
+            sf_dir, output_dir = flags.pop("sf_dir"), flags.pop("output_dir")
+            # the engagement profile is one wide row per user
+            rows = 10 if verb == "engagement-report" else 20
+            run(spark, sf_dir, output_dir, **flags).show(rows, truncate=False)
+        elif verb == "startjob":
+            startjob(
+                spark,
+                args.name,
+                args.job_module,
+                args.input_dir,
+                args.output_dir,
+                args.num_reducers,
+            )
+        elif verb == "query":
             df = REGISTRY[args.name].fn(spark, args.sf_dir)
             if args.output_dir:
                 df.write.mode("overwrite").parquet(args.output_dir)
             else:
                 df.show(args.limit, truncate=False)
-        finally:
-            spark.stop()
-        return 0
+        else:
+            from map_reduce_engine_spark.plans import physical_plan, plan_report
 
-    if args.verb == "plan":
-        from map_reduce_engine_spark.plans import physical_plan, plan_report
-        from map_reduce_engine_spark.queries import REGISTRY
-
-        if args.name not in REGISTRY:
-            parser.error(f"unknown query {args.name!r}; run `list`")
-        spark = get_spark(app_name=f"mre-plan-{args.name}")
-        try:
             df = REGISTRY[args.name].fn(spark, args.sf_dir)
             r = plan_report(df)
             for field_name in (
@@ -280,276 +348,6 @@ def main(argv: list[str] | None = None) -> int:
                 print(f"WARNING: {w}")
             if args.full:
                 print(physical_plan(df, "formatted"))
-        finally:
-            spark.stop()
-        return 0
-
-    if args.verb == "corpus-pipeline":
-        from map_reduce_engine_spark.examples.corpus_pipeline_job import run
-
-        spark = get_spark(app_name="mre-corpus-pipeline")
-        try:
-            audit = run(
-                spark,
-                args.sf_dir,
-                args.output_dir,
-                min_quality=args.min_quality,
-                jaccard_threshold=args.jaccard,
-            )
-            audit.show(truncate=False)
-        finally:
-            spark.stop()
-        return 0
-
-    if args.verb == "engagement-report":
-        from map_reduce_engine_spark.examples.engagement_report_job import run
-
-        spark = get_spark(app_name="mre-engagement-report")
-        try:
-            profile = run(spark, args.sf_dir, args.output_dir)
-            profile.show(10, truncate=False)
-        finally:
-            spark.stop()
-        return 0
-
-    if args.verb == "training-mix":
-        from map_reduce_engine_spark.examples.training_mix_job import run
-
-        spark = get_spark(app_name="mre-training-mix")
-        try:
-            gate = run(spark, args.sf_dir, args.output_dir)
-            gate.show(truncate=False)
-        finally:
-            spark.stop()
-        return 0
-
-    if args.verb == "recommend":
-        from map_reduce_engine_spark.examples.recommender_job import run
-
-        spark = get_spark(app_name="mre-recommend")
-        try:
-            gate = run(
-                spark, args.sf_dir, args.output_dir, min_hitrate_ppm=args.min_hitrate_ppm
-            )
-            gate.show(truncate=False)
-        finally:
-            spark.stop()
-        return 0
-
-    if args.verb == "privacy-audit":
-        from map_reduce_engine_spark.examples.privacy_audit_job import run
-
-        spark = get_spark(app_name="mre-privacy-audit")
-        try:
-            gate = run(
-                spark,
-                args.sf_dir,
-                args.output_dir,
-                max_at_risk_share=args.max_at_risk_share,
-                min_l=args.min_l,
-                max_t_ppm=args.max_t_ppm,
-            )
-            gate.show(truncate=False)
-        finally:
-            spark.stop()
-        return 0
-
-    if args.verb == "stream-monitor":
-        from map_reduce_engine_spark.examples.stream_monitor_job import run
-
-        spark = get_spark(app_name="mre-stream-monitor")
-        try:
-            gate = run(
-                spark,
-                args.sf_dir,
-                args.output_dir,
-                cusum_alarm_cents=args.cusum_alarm_cents,
-            )
-            gate.show(truncate=False)
-        finally:
-            spark.stop()
-        return 0
-
-    if args.verb == "group-comparison":
-        from map_reduce_engine_spark.examples.group_comparison_job import run
-
-        spark = get_spark(app_name="mre-group-comparison")
-        try:
-            gate = run(spark, args.sf_dir, args.output_dir)
-            gate.show(truncate=False)
-        finally:
-            spark.stop()
-        return 0
-
-    if args.verb == "timeseries-health":
-        from map_reduce_engine_spark.examples.timeseries_health_job import run
-
-        spark = get_spark(app_name="mre-timeseries-health")
-        try:
-            gate = run(
-                spark,
-                args.sf_dir,
-                args.output_dir,
-                max_changepoint_share_bp=args.max_changepoint_share_bp,
-            )
-            gate.show(truncate=False)
-        finally:
-            spark.stop()
-        return 0
-
-    if args.verb == "causal-audit":
-        from map_reduce_engine_spark.examples.causal_audit_job import run
-
-        spark = get_spark(app_name="mre-causal-audit")
-        try:
-            gate = run(
-                spark,
-                args.sf_dir,
-                args.output_dir,
-                confounding_tol_ppm=args.confounding_tol_ppm,
-            )
-            gate.show(truncate=False)
-        finally:
-            spark.stop()
-        return 0
-
-    if args.verb == "model-eval":
-        from map_reduce_engine_spark.examples.model_eval_job import run
-
-        spark = get_spark(app_name="mre-model-eval")
-        try:
-            gate = run(
-                spark,
-                args.sf_dir,
-                args.output_dir,
-                max_calib_gap_ppm=args.max_calib_gap_ppm,
-            )
-            gate.show(truncate=False)
-        finally:
-            spark.stop()
-        return 0
-
-    if args.verb == "feature-screen":
-        from map_reduce_engine_spark.examples.feature_screen_job import run
-
-        spark = get_spark(app_name="mre-feature-screen")
-        try:
-            gate = run(
-                spark,
-                args.sf_dir,
-                args.output_dir,
-                min_auc_edge_ppm=args.min_auc_edge_ppm,
-            )
-            gate.show(truncate=False)
-        finally:
-            spark.stop()
-        return 0
-
-    if args.verb == "data-selection":
-        from map_reduce_engine_spark.examples.data_selection_job import run
-
-        spark = get_spark(app_name="mre-data-selection")
-        try:
-            gate = run(
-                spark,
-                args.sf_dir,
-                args.output_dir,
-                max_dup_pairs=args.max_dup_pairs,
-                max_contaminated=args.max_contaminated,
-            )
-            gate.show(truncate=False)
-        finally:
-            spark.stop()
-        return 0
-
-    if args.verb == "incremental-ingest":
-        from map_reduce_engine_spark.examples.incremental_ingest_job import run
-
-        spark = get_spark(app_name="mre-incremental-ingest", metastore_dir=args.metastore_dir)
-        try:
-            gate = run(
-                spark,
-                args.sf_dir,
-                args.output_dir,
-                k=args.k,
-                jaccard_threshold=args.jaccard,
-                max_near_dup_bp=args.max_near_dup_bp,
-                max_contaminated_docs=args.max_contaminated,
-                index_table=args.index_table,
-                prebuilt=args.prebuilt,
-                eval_dir=args.eval_dir,
-            )
-            gate.show(truncate=False)
-        finally:
-            spark.stop()
-        return 0
-
-    if args.verb == "ann-serve":
-        from map_reduce_engine_spark.examples.ann_serve_job import run
-
-        spark = get_spark(app_name="mre-ann-serve", metastore_dir=args.metastore_dir)
-        try:
-            gate = run(
-                spark,
-                args.sf_dir,
-                args.output_dir,
-                k=args.k,
-                n_probe=args.n_probe,
-                batch_size=args.batch_size,
-                min_recall_permille=args.min_recall_permille,
-                index_table=args.index_table,
-                prebuilt=args.prebuilt,
-                rows_per_cell=args.rows_per_cell,
-                recall_queries=args.recall_queries,
-            )
-            gate.show(truncate=False)
-        finally:
-            spark.stop()
-        return 0
-
-    if args.verb == "tokenizer-bakeoff":
-        from map_reduce_engine_spark.examples.tokenizer_bakeoff_job import run
-
-        spark = get_spark(app_name="mre-tokenizer-bakeoff")
-        try:
-            gate = run(
-                spark,
-                args.sf_dir,
-                args.output_dir,
-                max_fertility_ppm=args.max_fertility_ppm,
-            )
-            gate.show(truncate=False)
-        finally:
-            spark.stop()
-        return 0
-
-    if args.verb == "retrieval-eval":
-        from map_reduce_engine_spark.examples.retrieval_eval_job import run
-
-        spark = get_spark(app_name="mre-retrieval-eval")
-        try:
-            gate = run(
-                spark,
-                args.sf_dir,
-                args.output_dir,
-                min_mean_ndcg_ppm=args.min_mean_ndcg_ppm,
-                min_common_at20=args.min_common_at20,
-            )
-            gate.show(truncate=False)
-        finally:
-            spark.stop()
-        return 0
-
-    spark = get_spark(app_name=f"mre-job-{args.name}")
-    try:
-        startjob(
-            spark,
-            args.name,
-            args.job_module,
-            args.input_dir,
-            args.output_dir,
-            args.num_reducers,
-        )
     finally:
         spark.stop()
     return 0

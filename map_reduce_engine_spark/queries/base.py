@@ -11,6 +11,7 @@ Conventions that make the DuckDB-oracle hash comparison robust:
 
 from __future__ import annotations
 
+import math
 from collections.abc import Callable, Sequence
 from dataclasses import dataclass
 
@@ -77,3 +78,20 @@ def local_rows(spark: SparkSession, rows: Sequence[Sequence], schema: str) -> Da
     arrow = to_arrow_schema(StructType.fromDDL(schema))
     cols = [pa.array([r[i] for r in rows], f.type) for i, f in enumerate(arrow)]
     return spark.createDataFrame(pa.Table.from_arrays(cols, schema=arrow))
+
+
+def normalize_result(
+    rows: Sequence[Sequence], columns: Sequence[str]
+) -> tuple[list[str], list[tuple[str, ...]]]:
+    """A result in the driver's comparison form: columns sorted by name,
+    then rows sorted — an order-insensitive multiset. Cells compare by
+    ``repr``; floats as ``repr(v + 0.0)`` (so -0.0 equals 0.0), NaN as
+    ``"NaN"``. Returns the sorted column names and the rows."""
+    def cell(v):
+        if isinstance(v, float):
+            return "NaN" if math.isnan(v) else repr(v + 0.0)
+        return repr(v)
+
+    order = sorted(range(len(columns)), key=lambda i: columns[i])
+    out = sorted(tuple(cell(row[i]) for i in order) for row in rows)
+    return [columns[i] for i in order], out

@@ -2703,6 +2703,7 @@ def greedy_max_coverage_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     vocab_total = dt.select("token").distinct().count()
     covered = None
+    covered_tokens = 0
     rows = []
     for r in range(1, _MAXCOV_K + 1):
         cand = dt if covered is None else dt.join(covered, "token", "left_anti")
@@ -2715,26 +2716,23 @@ def greedy_max_coverage_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         if top is None:  # universe exhausted — greedy stops early (oracle
             break  # CTEs go empty at the same round)
-        rows.append((r, int(top.doc_id), int(top.g)))
+        # every pick covers >= 1 new token, so vocab_total > 0 here
+        covered_tokens += int(top.g)
+        rows.append(
+            (r, int(top.doc_id), int(top.g), covered_tokens, vocab_total,
+             1000000 * covered_tokens // vocab_total)
+        )
         chosen_toks = dt.where(F.col("doc_id") == int(top.doc_id)).select("token")
         covered = (
             chosen_toks
             if covered is None
             else covered.union(chosen_toks).distinct()
         ).localCheckpoint(eager=True)
-    sel = spark.createDataFrame(rows, "sel_round bigint, doc_id bigint, new_tokens bigint")
-    w = Window.orderBy("sel_round").rowsBetween(Window.unboundedPreceding, 0)
-    return sel.select(
-        "sel_round",
-        "doc_id",
-        "new_tokens",
-        F.sum("new_tokens").over(w).cast("bigint").alias("covered_tokens"),
-        F.lit(int(vocab_total)).cast("bigint").alias("vocab_total"),
-        F.expr(
-            f"(1000000 * CAST(sum(new_tokens) OVER (ORDER BY sel_round "
-            f"ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)) "
-            f"div {int(vocab_total)}"
-        ).alias("coverage_ppm"),
+    return local_rows(
+        spark,
+        rows,
+        "sel_round bigint, doc_id bigint, new_tokens bigint, covered_tokens bigint, "
+        "vocab_total bigint, coverage_ppm bigint",
     )
 
 
@@ -5113,17 +5111,7 @@ def _k_truss_oracle(k: int = 4, rounds: int = 5) -> str:
 def k_truss_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from map_reduce_engine_spark.operators.graph import k_truss
 
-    items = t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey").distinct()
-    a, b = items.alias("a"), items.alias("b")
-    edges = (
-        a.join(b, "l_orderkey")
-        .where(F.col("a.l_partkey") < F.col("b.l_partkey"))
-        .groupBy(F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v"))
-        .agg(F.count("*").alias("support"))
-        .where(F.col("support") >= 2)
-        .select("u", "v")
-    )
-    return k_truss(edges, k=4, max_iter=5)
+    return k_truss(copurchase_edges(spark, sf_dir), k=4, max_iter=5)
 
 
 # --- Bradley-Terry paired-comparison ranking ---------------------------------
@@ -6038,6 +6026,7 @@ def cooks_distance_outlier_days(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 from map_reduce_engine_spark.queries.relational import (  # noqa: E402
     _COPURCHASE_EDGES_SQL,
+    copurchase_edges,
 )
 
 
@@ -6082,15 +6071,8 @@ from map_reduce_engine_spark.queries.relational import (  # noqa: E402
     "a left-anti equi-join, everything else hash aggregates.",
 )
 def adamic_adar_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    items = t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey").distinct()
-    a, b = items.alias("a"), items.alias("b")
     edges = (
-        a.join(b, "l_orderkey")
-        .where(F.col("a.l_partkey") < F.col("b.l_partkey"))
-        .groupBy(F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v"))
-        .agg(F.count("*").alias("s"))
-        .where(F.col("s") >= 2)
-        .select("u", "v")
+        copurchase_edges(spark, sf_dir)
         .localCheckpoint(eager=True)  # feeds und twice + the anti-join
     )
     und = edges.select(F.col("u").alias("a"), F.col("v").alias("b")).unionByName(
@@ -6181,15 +6163,8 @@ def adamic_adar_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     "operators/graph.py::triangle_count.",
 )
 def jaccard_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    items = t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey").distinct()
-    a, b = items.alias("a"), items.alias("b")
     edges = (
-        a.join(b, "l_orderkey")
-        .where(F.col("a.l_partkey") < F.col("b.l_partkey"))
-        .groupBy(F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v"))
-        .agg(F.count("*").alias("s"))
-        .where(F.col("s") >= 2)
-        .select("u", "v")
+        copurchase_edges(spark, sf_dir)
         .localCheckpoint(eager=True)  # feeds und twice + the anti-join
     )
     und = edges.select(F.col("u").alias("a"), F.col("v").alias("b")).unionByName(
@@ -8196,7 +8171,8 @@ def mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "rel",
                 F.greatest(F.col("smax"), dot(F.col("v"), c)).alias("smax"),
             )
-    return spark.createDataFrame(
+    return local_rows(
+        spark,
         rows,
         "sel_round bigint, vec_id bigint, rel_dot bigint, "
         "maxsim_dot bigint, mmr_score bigint",

@@ -1186,6 +1186,22 @@ def part_pair_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pairs.orderBy(F.desc("support"), "p1", "p2").limit(20)
 
 
+def copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The co-purchase graph: part pairs ``(u, v)``, ``u < v``, bought
+    together in at least 2 orders (``_COPURCHASE_EDGES_SQL``'s ``edges`` on
+    the oracle side). Callers that reuse the edges checkpoint them."""
+    items = t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey").distinct()
+    a, b = items.alias("a"), items.alias("b")
+    return (
+        a.join(b, "l_orderkey")
+        .where(F.col("a.l_partkey") < F.col("b.l_partkey"))
+        .groupBy(F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v"))
+        .agg(F.count("*").alias("support"))
+        .where(F.col("support") >= 2)
+        .select("u", "v")
+    )
+
+
 @register(
     "copurchase_triangles",
     oracle="""
@@ -1222,15 +1238,8 @@ def part_pair_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
 def copurchase_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     from map_reduce_engine_spark.operators.graph import triangle_count
 
-    items = t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey").distinct()
-    a, b = items.alias("a"), items.alias("b")
     edges = (
-        a.join(b, "l_orderkey")
-        .where(F.col("a.l_partkey") < F.col("b.l_partkey"))
-        .groupBy(F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v"))
-        .agg(F.count("*").alias("support"))
-        .where(F.col("support") >= 2)
-        .select("u", "v")
+        copurchase_edges(spark, sf_dir)
         # localCheckpoint, not persist(): materializes once for the degree
         # aggregate + three-way wedge join AND is reclaimed by the
         # ContextCleaner when the DF goes out of scope — a persist() here
@@ -3084,15 +3093,8 @@ def basket_size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     "histogram is max-degree-sized, the OLS runs on its points.",
 )
 def degree_distribution_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    items = t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey").distinct()
-    a, b = items.alias("a"), items.alias("b")
     edges = (
-        a.join(b, "l_orderkey")
-        .where(F.col("a.l_partkey") < F.col("b.l_partkey"))
-        .groupBy(F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v"))
-        .agg(F.count("*").alias("support"))
-        .where(F.col("support") >= 2)
-        .select("u", "v")
+        copurchase_edges(spark, sf_dir)
         .localCheckpoint(eager=True)
     )
     deg = (
@@ -3433,17 +3435,7 @@ def _k_core_oracle(k: int = 3, rounds: int = 8) -> str:
 def k_core_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from map_reduce_engine_spark.operators.graph import k_core
 
-    items = t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey").distinct()
-    a, b = items.alias("a"), items.alias("b")
-    edges = (
-        a.join(b, "l_orderkey")
-        .where(F.col("a.l_partkey") < F.col("b.l_partkey"))
-        .groupBy(F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v"))
-        .agg(F.count("*").alias("support"))
-        .where(F.col("support") >= 2)
-        .select("u", "v")
-    )
-    return k_core(edges, k=3, max_iter=8)
+    return k_core(copurchase_edges(spark, sf_dir), k=3, max_iter=8)
 
 
 @register(
@@ -3744,15 +3736,8 @@ _COPURCHASE_EDGES_SQL = """
     "all-integer with deterministic tiebreaks.",
 )
 def local_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
-    items = t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey").distinct()
-    a, b = items.alias("a"), items.alias("b")
     edges = (
-        a.join(b, "l_orderkey")
-        .where(F.col("a.l_partkey") < F.col("b.l_partkey"))
-        .groupBy(F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v"))
-        .agg(F.count("*").alias("s"))
-        .where(F.col("s") >= 2)
-        .select("u", "v")
+        copurchase_edges(spark, sf_dir)
         .localCheckpoint(eager=True)  # feeds the 3-way join AND the degree agg
     )
     und = edges.select(F.col("u").alias("node")).unionByName(
@@ -3826,15 +3811,8 @@ def local_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     "scalar double expression over identical integers in both engines.",
 )
 def degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    items = t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey").distinct()
-    a, b = items.alias("a"), items.alias("b")
     edges = (
-        a.join(b, "l_orderkey")
-        .where(F.col("a.l_partkey") < F.col("b.l_partkey"))
-        .groupBy(F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v"))
-        .agg(F.count("*").alias("s"))
-        .where(F.col("s") >= 2)
-        .select("u", "v")
+        copurchase_edges(spark, sf_dir)
         .localCheckpoint(eager=True)  # feeds und twice (degrees + pairs)
     )
     und = edges.select(F.col("u").alias("a"), F.col("v").alias("b")).unionByName(

@@ -61,7 +61,6 @@ from __future__ import annotations
 
 import argparse
 import json
-import math
 import sys
 import threading
 import time
@@ -74,21 +73,8 @@ import duckdb  # noqa: E402
 from pyspark.sql import SparkSession  # noqa: E402
 
 from map_reduce_engine_spark.queries import REGISTRY  # noqa: E402
+from map_reduce_engine_spark.queries.base import normalize_result  # noqa: E402
 from map_reduce_engine_spark.session import TABLES  # noqa: E402
-
-
-def _cell(v):
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        return repr(v + 0.0)
-    return repr(v)
-
-
-def _normalize(rows, columns):
-    order = sorted(range(len(columns)), key=lambda i: columns[i])
-    out = sorted(tuple(_cell(row[i]) for i in order) for row in rows)
-    return [columns[i] for i in order], out
 
 
 def main() -> int:
@@ -188,8 +174,8 @@ def main() -> int:
                 rec["oracle_rows"] = len(d_rows)
                 rec["rows_match"] = len(s_rows) == len(d_rows)
                 rec["schema_match"] = sorted(s_cols) == sorted(d_cols)
-                _, s_norm = _normalize(s_rows, s_cols)
-                _, d_norm = _normalize(d_rows, d_cols)
+                _, s_norm = normalize_result(s_rows, s_cols)
+                _, d_norm = normalize_result(d_rows, d_cols)
                 rec["hash_match"] = s_norm == d_norm
         except Exception as e:  # noqa: BLE001 — the sweep must finish
             rec["err"] = f"{type(e).__name__}: {e}"

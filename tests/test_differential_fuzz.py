@@ -29,6 +29,8 @@ import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
+from map_reduce_engine_spark.queries.base import normalize_result
+
 
 def _ex(n: int) -> int:
     """Fuzz depth, scaled by $MRE_FUZZ_DEPTH (default 1). Every fuzz here is
@@ -298,19 +300,6 @@ def queries(draw):
 # ------------------------------------------------------------- comparison
 
 
-def _cell(v):
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        return repr(v + 0.0)
-    return repr(v)
-
-
-def _normalize(rows, columns):
-    order = sorted(range(len(columns)), key=lambda i: columns[i])
-    return sorted(tuple(_cell(row[i]) for i in order) for row in rows)
-
-
 @pytest.fixture(scope="module")
 def spark_views(spark, sf_dir):
     for t in ("lineitem", "orders", "part", "documents", "events"):
@@ -329,9 +318,9 @@ def test_differential_spark_vs_duckdb(spark_views, duck, sql):
     """Every sampled query must hash-match across engines (driver semantics:
     order-insensitive multiset, columns sorted by name)."""
     sdf = spark_views.sql(sql)
-    s = _normalize([tuple(r) for r in sdf.collect()], sdf.columns)
+    _, s = normalize_result([tuple(r) for r in sdf.collect()], sdf.columns)
     rel = duck.sql(sql)
-    d = _normalize(rel.fetchall(), rel.columns)
+    _, d = normalize_result(rel.fetchall(), rel.columns)
     assert s == d, f"divergence on: {sql}\nfirst diffs: " + str(
         [p for p in zip(s, d) if p[0] != p[1]][:3]
     )
@@ -513,9 +502,9 @@ def test_differential_dialect_edges(spark_views, duck, sql):
     round-trips, division corners, ROLLUP/CUBE super-aggregates —
     hash-matched across engines."""
     sdf = spark_views.sql(sql)
-    s = _normalize([tuple(r) for r in sdf.collect()], sdf.columns)
+    _, s = normalize_result([tuple(r) for r in sdf.collect()], sdf.columns)
     rel = duck.sql(sql)
-    d = _normalize(rel.fetchall(), rel.columns)
+    _, d = normalize_result(rel.fetchall(), rel.columns)
     assert s == d, f"divergence on: {sql}\nfirst diffs: " + str(
         [p for p in zip(s, d) if p[0] != p[1]][:3]
     )
@@ -720,9 +709,9 @@ def test_differential_round7_edges(spark_views, duck, sql):
     and the shard identity must hold (agree = 1 on every row)."""
     sdf = spark_views.sql(sql)
     s_rows = [tuple(r) for r in sdf.collect()]
-    s = _normalize(s_rows, sdf.columns)
+    _, s = normalize_result(s_rows, sdf.columns)
     rel = duck.sql(sql)
-    d = _normalize(rel.fetchall(), rel.columns)
+    _, d = normalize_result(rel.fetchall(), rel.columns)
     assert s == d, f"divergence on: {sql}\nfirst diffs: " + str(
         [p for p in zip(s, d) if p[0] != p[1]][:3]
     )

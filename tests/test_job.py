@@ -118,6 +118,88 @@ def test_cli_query_rejects_unknown_name():
         main(["query", "no_such_query", "/tmp"])
 
 
+@pytest.mark.quick
+def test_cli_job_verbs_share_one_dispatch(monkeypatch):
+    """Every job verb runs through main()'s one dispatch path, with
+    get_spark and the job module's run() stubbed: the session is named
+    mre-<verb>, only the daily-loop verbs take --metastore-dir (and hand it
+    to get_spark, not run()), a flag left off never reaches run() (its own
+    default applies), renamed flags arrive under run()'s keywords, and the
+    session stops even when run() raises."""
+    import importlib
+
+    import map_reduce_engine_spark.__main__ as cli
+
+    events = []
+
+    class Session:
+        def stop(self):
+            events.append(("stop",))
+
+    class Shown:
+        def show(self, n, truncate):
+            events.append(("show", n, truncate))
+
+    session = Session()
+
+    def get_spark(**kw):
+        events.append(("get_spark", kw))
+        return session
+
+    def stub(verb, fail=False):
+        def run(spark, sf_dir, out_dir, **flags):
+            assert spark is session
+            events.append(("run", sf_dir, out_dir, flags))
+            if fail:
+                raise RuntimeError("job failed")
+            return Shown()
+
+        mod = importlib.import_module(f"map_reduce_engine_spark.examples.{cli.JOBS[verb]}")
+        monkeypatch.setattr(mod, "run", run)
+
+    def dispatch(verb, *flags):
+        events.clear()
+        assert cli.main([verb, "sf", "out", *flags]) == 0
+        return events[:]
+
+    monkeypatch.setattr(cli, "get_spark", get_spark)
+    assert len(cli.JOBS) == 16
+    daily = {"incremental-ingest", "ann-serve"}
+    for verb in cli.JOBS:
+        stub(verb)
+        rows = 10 if verb == "engagement-report" else 20
+        assert dispatch(verb) == [
+            ("get_spark", {"app_name": f"mre-{verb}", "metastore_dir": None}),
+            ("run", "sf", "out", {}),
+            ("show", rows, False),
+            ("stop",),
+        ], verb
+        if verb in daily:
+            got = dispatch(verb, "--metastore-dir", "ms")
+            assert got[:2] == [
+                ("get_spark", {"app_name": f"mre-{verb}", "metastore_dir": "ms"}),
+                ("run", "sf", "out", {}),
+            ], verb
+        else:
+            with pytest.raises(SystemExit):
+                cli.main([verb, "sf", "out", "--metastore-dir", "ms"])
+
+    got = dispatch("incremental-ingest", "--jaccard", "0.5", "--max-contaminated", "3")
+    assert got[1] == (
+        "run", "sf", "out", {"jaccard_threshold": 0.5, "max_contaminated_docs": 3}
+    )
+    got = dispatch("corpus-pipeline", "--jaccard", "0.9")
+    assert got[1] == ("run", "sf", "out", {"jaccard_threshold": 0.9})
+    got = dispatch("data-selection", "--max-contaminated", "3")
+    assert got[1] == ("run", "sf", "out", {"max_contaminated": 3})
+
+    stub("recommend", fail=True)
+    events.clear()
+    with pytest.raises(RuntimeError, match="job failed"):
+        cli.main(["recommend", "sf", "out"])
+    assert events[-1] == ("stop",)
+
+
 def test_job_audit_passes_clean_mapreduce(spark, tmp_path):
     """run(audit=True) submits a clean compat-surface job (its Arrow
     boundaries are sanctioned, not scale-killers)."""

@@ -10,28 +10,10 @@ sides (queries/base.py conventions).
 
 from __future__ import annotations
 
-import math
-
 import pytest
 
 from map_reduce_engine_spark.queries import REGISTRY
-
-
-def _normalize_cell(v):
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        # collapse -0.0 vs 0.0 and represent exactly
-        return repr(v + 0.0)
-    return repr(v)
-
-
-def _normalize(rows, columns):
-    """Sort columns by name (like the driver), then rows — a canonical multiset."""
-    order = sorted(range(len(columns)), key=lambda i: columns[i])
-    out = [tuple(_normalize_cell(row[i]) for i in order) for row in rows]
-    out.sort()
-    return [columns[i] for i in order], out
+from map_reduce_engine_spark.queries.base import normalize_result
 
 
 ORACLE_QUERIES = sorted(n for n, q in REGISTRY.items() if q.oracle is not None)
@@ -80,8 +62,8 @@ def parity_results(spark, sf_dir):
                 duck_rows = rel.fetchall()
             finally:
                 cur.close()
-            _, rec["s_norm"] = _normalize(spark_rows, rec["spark_cols"])
-            _, rec["d_norm"] = _normalize(duck_rows, rec["duck_cols"])
+            _, rec["s_norm"] = normalize_result(spark_rows, rec["spark_cols"])
+            _, rec["d_norm"] = normalize_result(duck_rows, rec["duck_cols"])
         except Exception as e:  # noqa: BLE001 — surfaced by the per-query test
             rec["err"] = f"{type(e).__name__}: {e}"
         return rec
@@ -135,8 +117,8 @@ def test_sampled_segmentation_salted_oracle_parity(spark, duck, sf_dir):
 
     sdf = unigram_sampled_segmentation(spark, sf_dir, salt=3)
     rel = duck.sql(sampled_segmentation_oracle(salt=3))
-    s_cols, s_norm = _normalize([tuple(r) for r in sdf.collect()], sdf.columns)
-    d_cols, d_norm = _normalize(rel.fetchall(), rel.columns)
+    s_cols, s_norm = normalize_result([tuple(r) for r in sdf.collect()], sdf.columns)
+    d_cols, d_norm = normalize_result(rel.fetchall(), rel.columns)
     assert s_cols == d_cols and s_norm == d_norm
 
 

@@ -867,9 +867,6 @@ _SANCTIONED_NESTED_LOOP = {
     "fold moments; validation joins fits to the 550-cell grid",
     "gbm_two_round_stumps": "1-row split/total broadcasts over the "
     "bounded feature grids (both split searches are grid windows)",
-    "greedy_max_coverage_docs": "k-row literal selection off the "
-    "distributed greedy loop (covered set stays distributed; only the "
-    "per-round 1-row argmax is collected)",
     "ipw_ate_estimators": "1-row estimator aggregates over the 5-stratum "
     "grid",
     "james_stein_brand_rates": "1-row shrinkage-factor broadcasts over "
@@ -977,8 +974,6 @@ _SANCTIONED_ROW_PYTHON = {"udtf_sentence_stats", "udtf_polymorphic_ngrams"}
 # genuinely raw fact rows through one task must be fixed (value-grid
 # rank-select / sharded prefix sums), not added here.
 _SANCTIONED_SINGLE_PARTITION = {
-    "greedy_max_coverage_docs": "final cumulative window over the k=5-row"
-    " driver-built selection frame",
     "pareto_frontier_parts": "phase-2 skyline merge: repartition(1) of the"
     " phase-1 per-partition-pruned candidate set (frontier-sized by"
     " construction; the documented two-phase skyline shape)",
