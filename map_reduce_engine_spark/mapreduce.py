@@ -13,7 +13,15 @@ Here the same contract is a thin Arrow-batched layer:
   reference's per-chunk MapRunner), emitting 0..n (key, value) pairs per
   record (flatMap semantics; the key argument of the reference's ``map`` is
   always null at invocation, ``MapRunner.java:76``, so our map_fn takes just
-  the record).
+  the record). The map side counts repeated pairs within each Arrow batch,
+  as the reference groups map output per key and chunk
+  (``MapRunner.java:97-106``): the shuffle carries one ``(key, value, n)``
+  row per distinct pair and batch, and ``reduce_fn`` still receives the
+  value ``n`` times. This is not a combiner — it assumes nothing about
+  ``reduce_fn`` — and it saves work in proportion to how often a pair
+  repeats within a batch (WordCount's ``(word, 1)``). A batch with no
+  repeated pair, or with a key or value that cannot be hashed, ships its
+  pairs as they are, each with ``n = 1``.
 - grouping is one shuffle on the key (the reference's A7 hash partitioner +
   A9 file-per-key grouping): ``repartition(key)`` then
   ``sortWithinPartitions(key)``, the reference's sort-by-key
@@ -37,7 +45,10 @@ Other known deviations:
 - a NaN key emitted by ``map_fn`` comes out as a NULL key: pyspark's
   pandas→Arrow conversion masks NaN as null, so it joins the null group;
 - a null in an integral value column reaches ``reduce_fn`` as NaN beside
-  the key's other values, which stay ints.
+  the key's other values, which stay ints;
+- pairs equal under Python ``==`` within one map batch are counted as one,
+  so ``reduce_fn`` sees copies of the first: ``(k, -0.0)`` then
+  ``(k, 0.0)`` reach it as two ``-0.0``.
 
 Scale note: this is the engine's slow path (Python per record). Built-in
 operators (wordcount & friends) use pure DataFrame expressions instead; use
@@ -51,6 +62,7 @@ re-reads ``pyspark.zip`` before every task (about 200 ms with
 
 from __future__ import annotations
 
+from collections import Counter
 from collections.abc import Callable, Iterable, Iterator
 from typing import Any
 
@@ -84,6 +96,21 @@ def _pairs_frame(pairs: list[tuple]) -> pd.DataFrame:
     keys = [p[0] for p in pairs]
     vals = [p[1] for p in pairs]
     return pd.DataFrame({"key": pd.Series(keys, dtype=object), "value": pd.Series(vals, dtype=object)})
+
+
+def _counted_frame(pairs: list[tuple]) -> pd.DataFrame:
+    """One map batch's (key, value) pairs as shuffle rows (key, value, n):
+    one per distinct pair, ``n`` its count in the batch."""
+    try:
+        counts = Counter(pairs)
+    except TypeError:  # an unhashable key or value
+        counts = None
+    if counts is None or len(counts) == len(pairs):
+        frame, n = _pairs_frame(pairs), 1
+    else:
+        frame, n = _pairs_frame(list(counts)), list(counts.values())
+    frame["n"] = n
+    return frame
 
 
 def _pylist(col: pd.Series, integral: bool) -> list:
@@ -126,9 +153,9 @@ def map_reduce(
             out: list[tuple] = []
             for rec in pdf.itertuples(index=False, name=None):
                 out.extend(map_fn(rec[0] if single_col else rec))
-            yield _pairs_frame(out)
+            yield _counted_frame(out)
 
-    mapped = df.mapInPandas(run_map, schema=f"key {kt}, value {vt}")
+    mapped = df.mapInPandas(run_map, schema=f"key {kt}, value {vt}, n bigint")
     # Reference semantics: numReducers bounds reduce parallelism
     # (Partitioner.java:34-40; clamp Communicator.java:137-147). In Spark
     # this is just the shuffle partition count; without it AQE coalesces.
@@ -139,19 +166,22 @@ def map_reduce(
     # One pass per sorted partition: reduce_fn runs once per contiguous key
     # run. -0.0 and 0.0 sort (and hash) as one key, labelled 0.0; a null key
     # in a numeric column arrives as NaN, so NaN keys compare equal.
-    int_key, int_value = (isinstance(f.dataType, IntegralType) for f in mapped.schema.fields)
+    int_key, int_value = (isinstance(f.dataType, IntegralType) for f in mapped.schema.fields[:2])
 
     def run_reduce(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         key: Any = None
         values: list | None = None  # the current key run; None before the first row
         for pdf in batches:
             out: list[tuple] = []
-            for k, v in zip(_pylist(pdf["key"], int_key), _pylist(pdf["value"], int_value)):
+            for k, v, n in zip(_pylist(pdf["key"], int_key), _pylist(pdf["value"], int_value), pdf["n"].tolist()):
                 if values is None or not (k == key or (k != k and key != key)):
                     if values is not None:
                         out.extend(reduce_fn(key, values))
                     key, values = (0.0 if k == 0 and isinstance(k, float) else k), []
-                values.append(v)
+                if n == 1:
+                    values.append(v)
+                else:
+                    values.extend([v] * n)
             if out:
                 yield _pairs_frame(out)
         if values is not None:

@@ -38,7 +38,7 @@ from map_reduce_engine_spark.conf import checkpoint, loop_conf
 _CHECKPOINT_EVERY = 2
 
 
-def _undirected(edges: DataFrame, src: str, dst: str) -> DataFrame:
+def undirected(edges: DataFrame, src: str, dst: str) -> DataFrame:
     """(a, b) — both directions of every edge, duplicates and self-loops kept.
 
     Symmetrized in-row, one explode per edge, rather than as a union of the
@@ -70,7 +70,7 @@ def connected_components(
     even short of it (labels travel one hop per round), which is what a
     fixed-round unrolled oracle replays.
     """
-    und0, m = checkpoint(_undirected(edges, src, dst))
+    und0, m = checkpoint(undirected(edges, src, dst))
     with loop_conf(edges.sparkSession, m["rows"]) as nparts:
         und = und0.repartition(nparts, "a").localCheckpoint(eager=True)
 
@@ -356,7 +356,7 @@ def bfs_distances(
     empty frontier makes the remaining rounds no-ops rather than
     early-exiting (no per-round driver count job).
     """
-    und0, m = checkpoint(_undirected(edges, src, dst).distinct())
+    und0, m = checkpoint(undirected(edges, src, dst).distinct())
     with loop_conf(edges.sparkSession, m["rows"]) as nparts:
         und = und0.repartition(nparts, "a").localCheckpoint(eager=True)
         dist = seeds.select(
@@ -399,7 +399,7 @@ def label_propagation(
     top-1 window over the aggregate — all keyed shuffles bounded by the
     label-histogram size.
     """
-    und0, m = checkpoint(_undirected(edges, src, dst))
+    und0, m = checkpoint(undirected(edges, src, dst))
     with loop_conf(edges.sparkSession, m["rows"]) as nparts:
         und = und0.repartition(nparts, "a").localCheckpoint(eager=True)
         labels = (
@@ -444,7 +444,7 @@ def k_core(
     step is an equi-join/hash-agg — the peel scales as O(rounds)
     co-partitioned shuffles at any graph size.
     """
-    und0, m = checkpoint(_undirected(edges, src, dst))
+    und0, m = checkpoint(undirected(edges, src, dst))
     n_edges = m["rows"]
     with loop_conf(edges.sparkSession, n_edges) as nparts:
         und = und0.repartition(nparts, "a").localCheckpoint(eager=True)

@@ -6071,13 +6071,13 @@ from map_reduce_engine_spark.queries.relational import (  # noqa: E402
     "a left-anti equi-join, everything else hash aggregates.",
 )
 def adamic_adar_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from map_reduce_engine_spark.operators.graph import undirected
+
     edges = (
         copurchase_edges(spark, sf_dir)
         .localCheckpoint(eager=True)  # feeds und twice + the anti-join
     )
-    und = edges.select(F.col("u").alias("a"), F.col("v").alias("b")).unionByName(
-        edges.select(F.col("v").alias("a"), F.col("u").alias("b"))
-    )
+    und = undirected(edges, "u", "v")
     deg = und.groupBy(F.col("a").alias("node")).agg(F.count("*").alias("degree"))
     w1, w2 = und.alias("w1"), und.alias("w2")
     wedge = (
@@ -6163,13 +6163,13 @@ def adamic_adar_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     "operators/graph.py::triangle_count.",
 )
 def jaccard_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from map_reduce_engine_spark.operators.graph import undirected
+
     edges = (
         copurchase_edges(spark, sf_dir)
         .localCheckpoint(eager=True)  # feeds und twice + the anti-join
     )
-    und = edges.select(F.col("u").alias("a"), F.col("v").alias("b")).unionByName(
-        edges.select(F.col("v").alias("a"), F.col("u").alias("b"))
-    )
+    und = undirected(edges, "u", "v")
     deg = und.groupBy(F.col("a").alias("node")).agg(
         F.count("*").cast("bigint").alias("degree")
     )

@@ -3811,13 +3811,13 @@ def local_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     "scalar double expression over identical integers in both engines.",
 )
 def degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from map_reduce_engine_spark.operators.graph import undirected
+
     edges = (
         copurchase_edges(spark, sf_dir)
         .localCheckpoint(eager=True)  # feeds und twice (degrees + pairs)
     )
-    und = edges.select(F.col("u").alias("a"), F.col("v").alias("b")).unionByName(
-        edges.select(F.col("v").alias("a"), F.col("u").alias("b"))
-    )
+    und = undirected(edges, "u", "v")
     deg = und.groupBy(F.col("a").alias("node")).agg(F.count("*").alias("d"))
     ep = (
         und.join(deg.select(F.col("node").alias("a"), F.col("d").alias("x")), "a")

@@ -5,11 +5,12 @@ duplicate edges and several disjoint parts — and is compared with networkx
 (connected components, BFS distances) or with a pure-Python loop that
 applies the operator's own fixed-round recurrence (k-core peel on the
 edge multiset, synchronous label propagation, GraphX-convention and
-personalized PageRank).
+personalized PageRank). k-truss is compared with networkx.
 """
 
 from __future__ import annotations
 
+import itertools
 import random
 from collections import Counter, defaultdict
 
@@ -20,6 +21,7 @@ from map_reduce_engine_spark.operators.graph import (
     bfs_distances,
     connected_components,
     k_core,
+    k_truss,
     label_propagation,
     pagerank,
     personalized_pagerank,
@@ -161,3 +163,20 @@ def test_personalized_pagerank_matches_rank_loop(spark, graph):
     edges, seeds, e, s = _frames(spark, graph, "src", "dst")
     got = {r.node: r.rank for r in personalized_pagerank(e, s, iterations=7).collect()}
     _assert_ranks(got, _rank_loop(edges, set(seeds), 7))
+
+
+@pytest.mark.parametrize("k", [3, 4])
+def test_k_truss_matches_networkx(spark, graph, k):
+    """k_truss needs canonical edges (u < v, no self-loops or repeats). The
+    seeded graphs are sparse and have no 4-truss, so a denser seeded part
+    (9 nodes, each pair joined with probability 1/2) rides along; its
+    3-truss and 4-truss are proper, non-empty subgraphs."""
+    rng = random.Random(4)
+    dense = [(a, b) for a, b in itertools.combinations(range(3001, 3010), 2) if rng.random() < 0.5]
+    canonical = sorted({(min(a, b), max(a, b)) for a, b in graph[0] + dense if a != b})
+    e = spark.createDataFrame(canonical, "u BIGINT, v BIGINT")
+    h = nx.k_truss(nx.Graph(canonical), k)
+    want = {(min(a, b), max(a, b)): len(set(h[a]) & set(h[b])) for a, b in h.edges()}
+    got = {(r.u, r.v): r.n_triangles for r in k_truss(e, k=k, max_iter=len(canonical)).collect()}
+    assert 0 < len(want) < len(canonical)
+    assert got == want

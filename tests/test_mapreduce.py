@@ -199,7 +199,8 @@ def _golden(records, mapper, reducer, single_col):
 def _edge_cases() -> dict:
     """name → (schema, records, mapper, reducer, map_reduce kwargs). The fns
     are nested so cloudpickle ships them by value: Python workers cannot
-    import this test module."""
+    import this test module. An ``input_partitions`` kwarg repartitions the
+    input first instead of reaching map_reduce."""
 
     def label(key):
         return "null" if key is None or key != key else str(key)
@@ -216,6 +217,21 @@ def _edge_cases() -> dict:
 
     def sorted_values_reducer(key, values):
         yield key, f"{label(key)}:" + ",".join(str(v) for v in sorted(values))
+
+    def null_value_as_nan_mapper(rec):
+        # a null in an integral value column reaches reduce_fn as NaN (the
+        # documented deviation); emitting NaN, which Arrow masks to null on
+        # the way in, lets the golden expect it
+        key, value = rec
+        yield key, math.nan if value is None else value
+
+    def fan_out_mapper(n):
+        for i in range(n):
+            yield "hot", i % 7
+        yield f"n{n}", n
+
+    def typed_values_reducer(key, values):
+        yield key, ",".join(sorted("nan" if v != v else f"{type(v).__name__}:{v}" for v in values))
 
     def zero_or_two_reducer(key, values):
         if key.startswith("drop"):
@@ -261,6 +277,28 @@ def _edge_cases() -> dict:
             mapreduce.wordcount_mapper, mapreduce.wordcount_reducer,
             dict(map_key_type="text", map_value_type="long", num_reducers=3),
         ),
+        # the hot key's values come from 3 map tasks and many batches; the
+        # reducer must see all 30 in one call
+        "hot_key_across_map_tasks": (
+            "k string, v bigint",
+            [("hot" if i % 3 else f"k{i}", i) for i in range(45)],
+            pair_mapper, sorted_values_reducer,
+            dict(map_key_type="text", map_value_type="long", out_value_type="text", input_partitions=3),
+        ),
+        # one key's values repeat within and across records: the reducer
+        # sees every copy
+        "repeated_pairs_within_a_batch": (
+            "n bigint",
+            [(150,), (70,), (1,), (0,)],
+            fan_out_mapper, sorted_values_reducer,
+            dict(map_key_type="text", map_value_type="long", out_value_type="text"),
+        ),
+        "null_in_integral_value_column": (
+            "k string, v bigint",
+            [("a", 1), ("a", None), ("b", None), ("a", 3), ("c", 2), ("b", 4), ("a", None)],
+            null_value_as_nan_mapper, typed_values_reducer,
+            dict(map_key_type="text", map_value_type="long", out_value_type="text"),
+        ),
         # today's behaviour, pinned: a NaN key from map_fn comes out as NULL and
         # joins the null-key group (pyspark masks NaN as null on the way to Arrow)
         "nan_key_becomes_null": (
@@ -278,7 +316,10 @@ REDUCE_EDGE_CASES = _edge_cases()
 @pytest.mark.parametrize("case", sorted(REDUCE_EDGE_CASES))
 def test_reduce_key_grouping_edge_cases(spark, case):
     schema, records, mapper, reducer, kwargs = REDUCE_EDGE_CASES[case]
+    kwargs = dict(kwargs)
     df = spark.createDataFrame(records, schema)
+    if "input_partitions" in kwargs:
+        df = df.repartition(kwargs.pop("input_partitions"))
     with scoped_conf(spark, {"spark.sql.execution.arrow.maxRecordsPerBatch": "3"}):
         rows = mapreduce.map_reduce(df, mapper, reducer, **kwargs).collect()
     got = sorted(repr((r.key, r.value)) for r in rows)
@@ -307,3 +348,42 @@ def test_wordcount_plan_is_one_exchange_and_two_map_passes(spark, prose_df):
     assert p.count("Exchange hashpartitioning(key") == 1, p
     assert p.count("MapInPandas") == 2, p
     assert "FlatMapGroupsInPandas" not in p, p
+
+
+def _plan_nodes(node):
+    """A physical plan's nodes, depth-first (py4j walk of ``children()``;
+    an adaptive plan's current plan is a field, not a child)."""
+    yield node
+    if node.nodeName() == "AdaptiveSparkPlan":
+        yield from _plan_nodes(node.executedPlan())
+    children = node.children()
+    for i in range(children.size()):
+        yield from _plan_nodes(children.apply(i))
+
+
+def test_shuffle_carries_one_row_per_distinct_pair(spark, prose_df):
+    """The map side counts repeated pairs in each batch: the key Exchange
+    ships (key, value, n) rows, not one row per (key, value) pair."""
+    plan = mapreduce.wordcount_job(prose_df)._jdf.queryExecution().executedPlan()
+    (exchange,) = [
+        n for n in _plan_nodes(plan)
+        if n.nodeName() == "Exchange" and "hashpartitioning(key" in n.toString()
+    ]
+    out = exchange.output()
+    types = {out.apply(i).name(): out.apply(i).dataType().typeName() for i in range(out.size())}
+    assert types == {"key": "string", "value": "long", "n": "long"}, types
+
+
+def test_counted_frame_counts_repeated_pairs():
+    """One row per distinct pair with its count; a batch without repeats,
+    or with an unhashable pair, ships its pairs as they are."""
+    def rows(pairs):
+        f = mapreduce._counted_frame(pairs)
+        return list(zip(f["key"], f["value"], f["n"]))
+
+    assert rows([("a", 1), ("b", 2), ("a", 1), ("a", None), ("a", 1)]) == [
+        ("a", 1, 3), ("b", 2, 1), ("a", None, 1),
+    ]
+    assert rows([("b", 2), ("a", 1)]) == [("b", 2, 1), ("a", 1, 1)]
+    assert rows([("a", [1]), ("a", [1])]) == [("a", [1], 1), ("a", [1], 1)]
+    assert rows([]) == []
