@@ -7,9 +7,13 @@ values, OutputCollector out)`` invoked by reflection (``MapRunner.java:36-128``,
 ``AddInterface.add`` semantics — numeric sum, string concat
 (``ReduceRunner.java:154-172``, ``IntWritable.java:41-46``, ``Text.java:28-32``).
 
-Here the same contract is a thin Arrow-batched layer:
+Here the same contract is a thin layer over Arrow record batches
+(``DataFrame.mapInArrow``): records and shuffle rows are read with
+whole-column ``to_pylist()``, and output batches are built with the exact
+Arrow types of the declared schema, so ``map_fn`` and ``reduce_fn`` see
+plain Python values of the column types, a null as ``None``.
 
-- ``map_fn`` runs in ``mapInPandas`` (per-partition batch iterator — the
+- ``map_fn`` runs in ``mapInArrow`` (per-partition batch iterator — the
   reference's per-chunk MapRunner), emitting 0..n (key, value) pairs per
   record (flatMap semantics; the key argument of the reference's ``map`` is
   always null at invocation, ``MapRunner.java:76``, so our map_fn takes just
@@ -26,7 +30,7 @@ Here the same contract is a thin Arrow-batched layer:
   A9 file-per-key grouping): ``repartition(key)`` then
   ``sortWithinPartitions(key)``, the reference's sort-by-key
   (``MapRunner.java:83-84``).
-- ``reduce_fn`` runs in one ``mapInPandas`` pass over each sorted partition
+- ``reduce_fn`` runs in one ``mapInArrow`` pass over each sorted partition
   (the reference's ReduceRunner scan, ``ReduceRunner.java:90-105``): it is
   called once per contiguous key run with ALL values for its key, carried
   across Arrow batch boundaries. Spark's shuffle already globalizes groups,
@@ -37,24 +41,23 @@ Here the same contract is a thin Arrow-batched layer:
 Deliberately NOT replicated (documented latent bugs, SURVEY.md §1.3):
 hyphenated-key corruption, tab-in-value corruption, unordered Hashtable
 output ordering. Key identity here is the typed column value: null keys
-form one group, ``-0.0`` and ``0.0`` are one key labelled ``0.0``, and a
-null key in a numeric column reaches ``reduce_fn`` as NaN.
+form one group, NaN keys form another, and ``-0.0`` and ``0.0`` are one key
+labelled ``0.0``.
 
-Other known deviations:
+A value that the declared column type cannot hold exactly raises an error
+naming the column, in either pass: a float with a fraction (or NaN) in an
+integral column, an out-of-range int, an int in a text column. A lossless
+float such as ``2.0`` is stored as the int ``2``.
 
-- a NaN key emitted by ``map_fn`` comes out as a NULL key: pyspark's
-  pandas→Arrow conversion masks NaN as null, so it joins the null group;
-- a null in an integral value column reaches ``reduce_fn`` as NaN beside
-  the key's other values, which stay ints;
-- pairs equal under Python ``==`` within one map batch are counted as one,
-  so ``reduce_fn`` sees copies of the first: ``(k, -0.0)`` then
-  ``(k, 0.0)`` reach it as two ``-0.0``.
+Other known deviation: pairs equal under Python ``==`` within one map batch
+are counted as one, so ``reduce_fn`` sees copies of the first: ``(k, -0.0)``
+then ``(k, 0.0)`` reach it as two ``-0.0``.
 
 Scale note: this is the engine's slow path (Python per record). Built-in
 operators (wordcount & friends) use pure DataFrame expressions instead; use
 this surface only for genuinely custom per-record / per-group logic.
 Each of its two Python stages also pays a fixed cost per task: Spark logs
-about 50 ms of Python time for an empty one-row ``mapInPandas`` task in a
+about 50 ms of Python time for an empty one-row ``mapInArrow`` task in a
 ``get_spark`` session, whose worker daemon (``worker_daemon.py``) no longer
 re-reads ``pyspark.zip`` before every task (about 200 ms with
 ``pyspark.daemon``, measured on a 4-vCPU host).
@@ -66,10 +69,11 @@ from collections import Counter
 from collections.abc import Callable, Iterable, Iterator
 from typing import Any
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import IntegralType
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 # The reference's five Writable wrapper types (SURVEY.md §1.2) → Spark SQL
 # types + their AddInterface.add merge semantics.
@@ -91,35 +95,36 @@ def _add_semantics(t: str) -> str:
     return WRITABLES[t][1] if t in WRITABLES else ("concat" if t == "string" else "sum")
 
 
-def _pairs_frame(pairs: list[tuple]) -> pd.DataFrame:
-    """(key, value) pairs as an object-dtype frame; Arrow casts to the schema."""
-    keys = [p[0] for p in pairs]
-    vals = [p[1] for p in pairs]
-    return pd.DataFrame({"key": pd.Series(keys, dtype=object), "value": pd.Series(vals, dtype=object)})
+def _column(values: list, field: pa.Field, stage: str) -> pa.Array:
+    """``values`` as an Arrow array of ``field``'s type. An integral column
+    is built by inference plus a safe cast, so a fraction or NaN raises
+    where a typed conversion would truncate; every other type converts
+    directly, so an int in a text column raises."""
+    try:
+        if pa.types.is_integer(field.type):
+            return pa.array(values).cast(field.type)
+        return pa.array(values, type=field.type)
+    except (pa.ArrowException, OverflowError) as e:
+        raise ValueError(f"map_reduce {stage} output column {field.name!r} ({field.type}): {e}") from e
 
 
-def _counted_frame(pairs: list[tuple]) -> pd.DataFrame:
-    """One map batch's (key, value) pairs as shuffle rows (key, value, n):
-    one per distinct pair, ``n`` its count in the batch."""
+def _batch(schema: pa.Schema, stage: str, pairs: list, *extra: list) -> pa.RecordBatch:
+    """(key, value) pairs, plus any further columns, as one batch of ``schema``."""
+    cols = [[p[0] for p in pairs], [p[1] for p in pairs], *extra]
+    return pa.RecordBatch.from_arrays([_column(c, f, stage) for c, f in zip(cols, schema)], schema=schema)
+
+
+def _counted(pairs: list[tuple]) -> tuple[list[tuple], list[int]]:
+    """One map batch's (key, value) pairs as shuffle rows: the distinct
+    pairs and their counts in the batch. A batch with no repeated pair, or
+    with an unhashable key or value, ships its pairs as they are."""
     try:
         counts = Counter(pairs)
     except TypeError:  # an unhashable key or value
         counts = None
     if counts is None or len(counts) == len(pairs):
-        frame, n = _pairs_frame(pairs), 1
-    else:
-        frame, n = _pairs_frame(list(counts)), list(counts.values())
-    frame["n"] = n
-    return frame
-
-
-def _pylist(col: pd.Series, integral: bool) -> list:
-    """A batch column as Python values. pandas widens an integral column
-    holding a null to float64; its values go back to ints, nulls stay NaN."""
-    vals = col.tolist()
-    if integral and col.dtype.kind == "f":
-        return [v if v != v else int(v) for v in vals]
-    return vals
+        return pairs, [1] * len(pairs)
+    return list(counts), list(counts.values())
 
 
 def map_reduce(
@@ -143,19 +148,21 @@ def map_reduce(
     """
     out_key_type = out_key_type or map_key_type
     out_value_type = out_value_type or map_value_type
-    kt, vt = _sql_type(map_key_type), _sql_type(map_value_type)
-    okt, ovt = _sql_type(out_key_type), _sql_type(out_value_type)
+    map_ddl = f"key {_sql_type(map_key_type)}, value {_sql_type(map_value_type)}, n bigint"
+    out_ddl = f"key {_sql_type(out_key_type)}, value {_sql_type(out_value_type)}"
+    map_schema, out_schema = (to_arrow_schema(StructType.fromDDL(d)) for d in (map_ddl, out_ddl))
 
     single_col = len(df.columns) == 1
 
-    def run_map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
+    def run_map(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            cols = [c.to_pylist() for c in batch.columns]
             out: list[tuple] = []
-            for rec in pdf.itertuples(index=False, name=None):
-                out.extend(map_fn(rec[0] if single_col else rec))
-            yield _counted_frame(out)
+            for rec in cols[0] if single_col else zip(*cols):
+                out.extend(map_fn(rec))
+            yield _batch(map_schema, "map", *_counted(out))
 
-    mapped = df.mapInPandas(run_map, schema=f"key {kt}, value {vt}, n bigint")
+    mapped = df.mapInArrow(run_map, schema=map_ddl)
     # Reference semantics: numReducers bounds reduce parallelism
     # (Partitioner.java:34-40; clamp Communicator.java:137-147). In Spark
     # this is just the shuffle partition count; without it AQE coalesces.
@@ -163,17 +170,16 @@ def map_reduce(
         mapped = mapped.repartition(num_reducers, "key")
     else:
         mapped = mapped.repartition("key")
-    # One pass per sorted partition: reduce_fn runs once per contiguous key
-    # run. -0.0 and 0.0 sort (and hash) as one key, labelled 0.0; a null key
-    # in a numeric column arrives as NaN, so NaN keys compare equal.
-    int_key, int_value = (isinstance(f.dataType, IntegralType) for f in mapped.schema.fields[:2])
 
-    def run_reduce(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    # One pass per sorted partition: reduce_fn runs once per contiguous key
+    # run. -0.0 and 0.0 sort (and hash) as one key, labelled 0.0; NaN keys
+    # sort together and compare equal here.
+    def run_reduce(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         key: Any = None
         values: list | None = None  # the current key run; None before the first row
-        for pdf in batches:
+        for batch in batches:
             out: list[tuple] = []
-            for k, v, n in zip(_pylist(pdf["key"], int_key), _pylist(pdf["value"], int_value), pdf["n"].tolist()):
+            for k, v, n in zip(*(c.to_pylist() for c in batch.columns)):
                 if values is None or not (k == key or (k != k and key != key)):
                     if values is not None:
                         out.extend(reduce_fn(key, values))
@@ -183,17 +189,17 @@ def map_reduce(
                 else:
                     values.extend([v] * n)
             if out:
-                yield _pairs_frame(out)
+                yield _batch(out_schema, "reduce", out)
         if values is not None:
-            yield _pairs_frame(list(reduce_fn(key, values)))
+            yield _batch(out_schema, "reduce", list(reduce_fn(key, values)))
 
-    reduced = mapped.sortWithinPartitions("key").mapInPandas(run_reduce, schema=f"key {okt}, value {ovt}")
+    reduced = mapped.sortWithinPartitions("key").mapInArrow(run_reduce, schema=out_ddl)
 
     if final_merge:
         # AddInterface final combine (ReduceRunner.java:154-172): merge rows
         # sharing a key — sum for numeric values, concat for text.
         if _add_semantics(out_value_type) == "sum":
-            reduced = reduced.groupBy("key").agg(F.sum("value").cast(ovt).alias("value"))
+            reduced = reduced.groupBy("key").agg(F.sum("value").cast(_sql_type(out_value_type)).alias("value"))
         else:
             reduced = reduced.groupBy("key").agg(F.concat_ws("", F.collect_list("value")).alias("value"))
     return reduced

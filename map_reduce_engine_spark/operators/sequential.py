@@ -1,10 +1,11 @@
 """Sequential per-group operators — the sanctioned grouped-map Python path.
 
 Some per-group logic is genuinely order-dependent (recurrences over event
-time) and has no single-statement SQL form. These run as Arrow-batched
-``applyInPandas`` — the reference's per-group ReduceRunner analogue
+time) and has no single-statement SQL form. These run as Arrow-native
+``applyInArrow`` — the reference's per-group ReduceRunner analogue
 (``ReduceRunner.java:90-105``), here with bounded per-group state and
-deterministic ordering.
+deterministic ordering. Each group arrives as a ``pyarrow.Table`` and is
+read with whole-column ``to_pylist()``; nothing goes through pandas.
 
 Scale shape: one shuffle on the group key; each task holds one group's rows
 (bounded by per-user event counts, not table size). This is the engine's
@@ -14,9 +15,7 @@ pattern for any custom stateful batch operator; the streaming twin is
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 
 
@@ -35,54 +34,15 @@ def ewma_per_group(
     """
     schema = f"{group_col} BIGINT, ewma DOUBLE, n_events BIGINT"
 
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order_cols, kind="mergesort")
+    def run(table: pa.Table) -> pa.Table:
+        order = list(zip(*(table[c].to_pylist() for c in order_cols)))
+        vals = table[value_col].to_pylist()
         s = None
-        for x in pdf[value_col]:
-            s = float(x) if s is None else alpha * float(x) + (1.0 - alpha) * s
-        return pd.DataFrame(
-            {group_col: [pdf[group_col].iloc[0]], "ewma": [s], "n_events": [len(pdf)]}
-        )
-
-    cols = [group_col, *order_cols, value_col]
-    return df.select(*cols).groupBy(group_col).applyInPandas(run, schema=schema)
-
-
-def ewma_per_group_arrow(
-    df: DataFrame,
-    group_col: str,
-    order_cols: list[str],
-    value_col: str,
-    alpha: float = 0.5,
-) -> DataFrame:
-    """``ewma_per_group`` on the Arrow-native grouped path (``applyInArrow``).
-
-    Identical recurrence; the group arrives as a ``pyarrow.Table`` with NO
-    pandas materialization — for wide groups this skips the Arrow→pandas
-    conversion entirely (no index, no block consolidation), the cheapest
-    Python boundary Spark 4 offers. Conformance-tested to produce exactly
-    the applyInPandas twin's results.
-    """
-    import pyarrow as pa
-
-    schema = f"{group_col} BIGINT, ewma DOUBLE, n_events BIGINT"
-
-    def run(table: "pa.Table") -> "pa.Table":
-        idx = sorted(
-            range(table.num_rows),
-            key=lambda i: tuple(table[c][i].as_py() for c in order_cols),
-        )
-        s = None
-        vals = table[value_col]
-        for i in idx:
-            x = float(vals[i].as_py())
+        for i in sorted(range(table.num_rows), key=order.__getitem__):
+            x = float(vals[i])
             s = x if s is None else alpha * x + (1.0 - alpha) * s
         return pa.table(
-            {
-                group_col: [table[group_col][0].as_py()],
-                "ewma": [s],
-                "n_events": [table.num_rows],
-            }
+            {group_col: [table[group_col][0].as_py()], "ewma": [s], "n_events": [table.num_rows]}
         )
 
     cols = [group_col, *order_cols, value_col]

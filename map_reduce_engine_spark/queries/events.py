@@ -317,7 +317,7 @@ def streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="per-user EWMA (alpha=0.5) — an order-dependent recurrence with no "
     "single-statement SQL form, run as the sanctioned grouped-map Python "
-    "path (applyInPandas, operators/sequential.py). The oracle recomputes "
+    "path (applyInArrow, operators/sequential.py). The oracle recomputes "
     "it closed-form (sum of power-weighted terms); alpha=0.5 keeps every "
     "halving step FP-exact so both formulations agree to rounding",
 )
@@ -811,15 +811,14 @@ def event_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="per-user EWMA through Spark 4's Arrow-native grouped path "
     "(applyInArrow — the group arrives as a pyarrow.Table, no pandas "
-    "materialization at all). Same closed-form oracle as "
-    "events_ewma_per_user; together the two entries prove the pandas and "
-    "arrow grouped boundaries compute identically",
+    "materialization at all). The same operator and closed-form oracle as "
+    "events_ewma_per_user, kept as a second registry name",
 )
 def events_ewma_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from map_reduce_engine_spark.operators.sequential import ewma_per_group_arrow
+    from map_reduce_engine_spark.operators.sequential import ewma_per_group
 
     ev = t(spark, sf_dir, "events")
-    out = ewma_per_group_arrow(
+    out = ewma_per_group(
         ev, group_col="user_id", order_cols=["ts", "event_id"], value_col="value", alpha=0.5
     )
     return out.select("user_id", F.round("ewma", 6).alias("ewma"), "n_events")

@@ -4,8 +4,9 @@
 ``spark.python.daemon.module`` conf, so Spark starts
 ``python -m map_reduce_engine_spark.worker_daemon`` where it would start
 ``python -m pyspark.daemon``. The daemon forks (and reuses) the Python
-workers that run every ``mapInPandas``/``applyInPandas``/pandas-UDF task,
-including both stages of ``mapreduce.map_reduce``.
+workers that run every Python UDF task (``mapInArrow``, ``applyInArrow``,
+``mapInPandas``, ``applyInPandas``, pandas UDFs), including both stages of
+``mapreduce.map_reduce``.
 
 Why: every Python task starts in ``pyspark.worker_util.setup_spark_files``,
 which calls ``importlib.invalidate_caches()`` so that files added with

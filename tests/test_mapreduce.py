@@ -9,6 +9,7 @@ token multiset count, order-insensitive).
 from __future__ import annotations
 
 import math
+import re
 from collections import Counter
 
 import pytest
@@ -185,13 +186,13 @@ def test_writable_type_mapping():
 
 
 def _golden(records, mapper, reducer, single_col):
-    """Group mapper output by key in Python (NaN keys become null, as the
-    pandas→Arrow conversion masks them; -0.0 joins 0.0) and reduce."""
+    """Group mapper output by key in Python (NaN keys form one group of
+    their own; -0.0 joins 0.0) and reduce."""
     groups: dict = {}
     for rec in records:
         for k, v in mapper(rec[0] if single_col else rec):
             if isinstance(k, float):
-                k = None if math.isnan(k) else k + 0.0
+                k = math.nan if math.isnan(k) else k + 0.0  # one NaN object: one dict key
             groups.setdefault(k, []).append(v)
     return sorted(repr(pair) for k, vs in groups.items() for pair in reducer(k, vs))
 
@@ -203,7 +204,7 @@ def _edge_cases() -> dict:
     input first instead of reaching map_reduce."""
 
     def label(key):
-        return "null" if key is None or key != key else str(key)
+        return "null" if key is None else str(key)
 
     def pair_mapper(rec):
         yield rec
@@ -217,13 +218,6 @@ def _edge_cases() -> dict:
 
     def sorted_values_reducer(key, values):
         yield key, f"{label(key)}:" + ",".join(str(v) for v in sorted(values))
-
-    def null_value_as_nan_mapper(rec):
-        # a null in an integral value column reaches reduce_fn as NaN (the
-        # documented deviation); emitting NaN, which Arrow masks to null on
-        # the way in, lets the golden expect it
-        key, value = rec
-        yield key, math.nan if value is None else value
 
     def fan_out_mapper(n):
         for i in range(n):
@@ -293,15 +287,25 @@ def _edge_cases() -> dict:
             fan_out_mapper, sorted_values_reducer,
             dict(map_key_type="text", map_value_type="long", out_value_type="text"),
         ),
+        # a null value reaches reduce_fn as None beside the key's ints
         "null_in_integral_value_column": (
             "k string, v bigint",
             [("a", 1), ("a", None), ("b", None), ("a", 3), ("c", 2), ("b", 4), ("a", None)],
-            null_value_as_nan_mapper, typed_values_reducer,
+            pair_mapper, typed_values_reducer,
             dict(map_key_type="text", map_value_type="long", out_value_type="text"),
         ),
-        # today's behaviour, pinned: a NaN key from map_fn comes out as NULL and
-        # joins the null-key group (pyspark masks NaN as null on the way to Arrow)
-        "nan_key_becomes_null": (
+        # a struct's int field stays an int in every value, whether or not
+        # its batch also holds a null struct
+        "struct_values_with_a_null_struct": (
+            "k string, v struct<a:int,b:string>",
+            [("k", {"a": 1, "b": "x"}), ("k", None), ("j", {"a": 2, "b": "y"}),
+             ("k", {"a": 3, "b": None}), ("j", None), ("j", {"a": 4, "b": "z"}),
+             ("k", {"a": 1, "b": "x"})],
+            pair_mapper, typed_values_reducer,
+            dict(map_key_type="text", map_value_type="struct<a:int,b:string>", out_value_type="text"),
+        ),
+        # a NaN key from map_fn is its own key, apart from the null key
+        "nan_key_is_its_own_key": (
             "value string",
             [("nan a",), ("null b",), ("2.5 c",), ("nan d",)],
             float_mapper, sorted_values_reducer,
@@ -342,11 +346,12 @@ def test_negative_zero_key_is_labelled_zero(spark):
 
 
 def test_wordcount_plan_is_one_exchange_and_two_map_passes(spark, prose_df):
-    """The reduce is a sorted-partition mapInPandas pass behind the one key
+    """The reduce is a sorted-partition mapInArrow pass behind the one key
     shuffle, not a grouped-map (applyInPandas) round trip per key."""
     p = physical_plan(mapreduce.wordcount_job(prose_df), "simple")
     assert p.count("Exchange hashpartitioning(key") == 1, p
-    assert p.count("MapInPandas") == 2, p
+    assert p.count("MapInArrow") == 2, p
+    assert "MapInPandas" not in p, p
     assert "FlatMapGroupsInPandas" not in p, p
 
 
@@ -378,8 +383,8 @@ def test_counted_frame_counts_repeated_pairs():
     """One row per distinct pair with its count; a batch without repeats,
     or with an unhashable pair, ships its pairs as they are."""
     def rows(pairs):
-        f = mapreduce._counted_frame(pairs)
-        return list(zip(f["key"], f["value"], f["n"]))
+        distinct, ns = mapreduce._counted(pairs)
+        return [(k, v, n) for (k, v), n in zip(distinct, ns)]
 
     assert rows([("a", 1), ("b", 2), ("a", 1), ("a", None), ("a", 1)]) == [
         ("a", 1, 3), ("b", 2, 1), ("a", None, 1),
@@ -387,3 +392,38 @@ def test_counted_frame_counts_repeated_pairs():
     assert rows([("b", 2), ("a", 1)]) == [("b", 2, 1), ("a", 1, 1)]
     assert rows([("a", [1]), ("a", [1])]) == [("a", [1], 1), ("a", [1], 1)]
     assert rows([]) == []
+
+
+@pytest.mark.parametrize(
+    "map_pair, reduce_pair, kwargs, error",
+    [
+        (("a", 1.5), None, {}, "map output column 'value' (int64)"),
+        (("a", math.nan), None, {}, "map output column 'value' (int64)"),
+        ((1.5, 1), None, dict(map_key_type="long"), "map output column 'key' (int64)"),
+        (("a", 1), ("a", 2.5), {}, "reduce output column 'value' (int64)"),
+        (("a", 1), (0.5, 1), dict(out_key_type="int"), "reduce output column 'key' (int32)"),
+        (("a", 7), None, dict(map_value_type="text"), "map output column 'value' (string)"),
+    ],
+    ids=["map_value_fraction", "map_value_nan", "map_key_fraction",
+         "reduce_value_fraction", "reduce_key_fraction", "int_in_text_column"],
+)
+def test_lossy_output_value_raises_naming_the_column(spark, map_pair, reduce_pair, kwargs, error):
+    """A value its column type cannot hold exactly fails the job with an
+    error naming the pass and the column; nothing is truncated."""
+    df = spark.createDataFrame([("x",)], ["value"])
+    out = mapreduce.map_reduce(
+        df, lambda rec: [map_pair], lambda k, vs: [reduce_pair or (k, vs[0])], **kwargs
+    )
+    with pytest.raises(Exception, match=re.escape(error)):
+        out.collect()
+
+
+def test_lossless_float_in_integral_column_is_stored_as_int(spark):
+    df = spark.createDataFrame([("x",)], ["value"])
+    out = mapreduce.map_reduce(
+        df,
+        lambda rec: [("a", 2.0), ("a", 3)],
+        lambda k, vs: [(k, ",".join(sorted(f"{type(v).__name__}:{v}" for v in vs)))],
+        out_value_type="text",
+    )
+    assert [(r.key, r.value) for r in out.collect()] == [("a", "int:2,int:3")]

@@ -20,6 +20,50 @@ ORACLE_QUERIES = sorted(n for n, q in REGISTRY.items() if q.oracle is not None)
 ROWS_ONLY_QUERIES = sorted(n for n, q in REGISTRY.items() if q.oracle is None)
 
 
+def _drain(work, run, results: dict, lock) -> None:
+    """Run ``run(name)`` for each name left on the ``work`` queue, storing
+    its record under the name. An exception that escapes ``run`` is
+    recorded against the entry it was running, and the worker goes on to
+    the next one, so no later entry is left without a result."""
+    from queue import Empty
+
+    while True:
+        try:
+            name = work.get_nowait()
+        except Empty:
+            return
+        try:
+            rec = run(name)
+        except Exception as e:  # noqa: BLE001 — reported by test_matches_oracle
+            # BaseException.__repr__ reads only e.args, so it cannot fail the
+            # way a Py4J error's own str() can once the JVM link is gone
+            rec = {"err": f"{type(e).__name__} escaped the parity worker: {BaseException.__repr__(e)}"}
+        with lock:
+            results[name] = rec
+
+
+@pytest.mark.quick
+def test_drain_records_an_escaping_error_and_goes_on():
+    import threading
+    from queue import SimpleQueue
+
+    class Escaping(RuntimeError):
+        pass
+
+    def run(name):
+        if name == "b":
+            raise Escaping("boom")
+        return {"err": None, "name": name}
+
+    work: SimpleQueue = SimpleQueue()
+    for n in "abc":
+        work.put(n)
+    results: dict = {}
+    _drain(work, run, results, threading.Lock())
+    assert results["a"] == {"err": None, "name": "a"} and results["c"]["name"] == "c"
+    assert results["b"]["err"] == "Escaping escaped the parity worker: Escaping('boom')"
+
+
 @pytest.fixture(scope="session")
 def parity_results(spark, sf_dir):
     """Evaluate EVERY oracle query once through a 4-worker parallel sweep
@@ -33,7 +77,7 @@ def parity_results(spark, sf_dir):
     semantics per query are unchanged — same session config, same
     normalization, same strict equality."""
     import threading
-    from queue import Empty, SimpleQueue
+    from queue import SimpleQueue
 
     import duckdb
 
@@ -69,14 +113,7 @@ def parity_results(spark, sf_dir):
         return rec
 
     def worker(session) -> None:
-        while True:
-            try:
-                name = work.get_nowait()
-            except Empty:
-                return
-            rec = run_entry(name, session)
-            with lock:
-                results[name] = rec
+        _drain(work, lambda name: run_entry(name, session), results, lock)
 
     sessions = [spark.newSession() for _ in range(4)]
     threads = [threading.Thread(target=worker, args=(s,)) for s in sessions]
@@ -90,7 +127,8 @@ def parity_results(spark, sf_dir):
 
 @pytest.mark.parametrize("name", ORACLE_QUERIES)
 def test_matches_oracle(name, parity_results):
-    rec = parity_results[name]
+    rec = parity_results.get(name)
+    assert rec is not None, f"{name}: no result recorded"
     assert rec["err"] is None, f"{name}: {rec['err']}"
     spark_cols, duck_cols = rec["spark_cols"], rec["duck_cols"]
     assert sorted(spark_cols) == sorted(duck_cols), (

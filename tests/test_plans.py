@@ -188,12 +188,14 @@ def test_multimodal_features_prunes_before_python(spark, sf_dir):
 def test_hot_paths_have_no_python_eval(spark, sf_dir, name):
     """Built-in operators are pure JVM expressions: no row-at-a-time Python
     (BatchEvalPython) and no Arrow Python eval in the plan. The map/reduce
-    compat surface is the only sanctioned Python boundary."""
+    compat surface (MapInArrow) is the only sanctioned Python boundary."""
     p = plan(REGISTRY[name].fn(spark, sf_dir))
     assert "BatchEvalPython" not in p
     assert "ArrowEvalPython" not in p
     assert "FlatMapGroupsInPandas" not in p
     assert "MapInPandas" not in p
+    assert "FlatMapGroupsInArrow" not in p
+    assert "MapInArrow" not in p
 
 
 def test_wordcount_wholestage_codegen(spark, sf_dir):
